@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.QueryDsl
 import graft.plans.QueryDsl.{Env, Mapping}
-import graft.sources.{SourceRegistry, Tables}
+import graft.sources.{SourceCache, SourceRegistry, Tables}
 
 /** Registered queries that run END-TO-END through the
   * [[graft.plans.QueryDsl]] compiler — the engine consumed the way the
@@ -60,26 +60,32 @@ object DslQueries {
     * signal streams (SURVEY.md S3/S6 — overlapping document streams,
     * like the reference's `apm*` vs `logs-*` over one physical
     * cluster); `now` pins to the dataset's max timestamp
-    * ([[Tables.maxBound]]'s date-math determinism device, fetched ONCE
-    * per request like the reference resolves date math once per
-    * search).
+    * ([[Tables.maxBound]]'s date-math determinism device).
+    *
+    * The scans and `now` resolve once per FILE GENERATION
+    * ([[SourceCache]]), as this file's other envs' scans do: requests
+    * between two writes share one resolution (the reference searches
+    * an index whose mapping is already resolved), and the first
+    * request after any file under a source changes resolves again and
+    * sees the new data.
     */
   def signalEnv(spark: SparkSession, dir: String): Env = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sig = Tables.signals(spark, dir)
-    val logs = Tables.signalsFrom(Tables.eventsFrom(
-      SourceRegistry.forDir(dir).read(spark, "signals_logs")))
-    val bound = Tables.maxBound(sig, "ts") match {
-      case t: java.sql.Timestamp => t
-      case _ => null
-    }
-    Env(
-      indices = Map(ApmPattern -> sig, LogsPattern -> logs),
-      mapping = SignalMapping,
-      now = bound)
+    signalEnvOf(spark, SourceRegistry.forDir(dir))
   }
 
-  /** Documents-source env (the text-search surface). */
+  /** Both patterns read through the registry's `signals_apm` /
+    * `signals_logs` refs; `now` is the APM source's bound.
+    */
+  private def signalEnvOf(spark: SparkSession, reg: SourceRegistry): Env = {
+    val apm = SourceCache.resolve(spark, reg.resolve("signals_apm"))
+    val logs = SourceCache.resolve(spark, reg.resolve("signals_logs"))
+    Env(
+      indices = Map(ApmPattern -> apm.signals, LogsPattern -> logs.signals),
+      mapping = SignalMapping,
+      now = apm.maxTs)
+  }
+
   /** THE documents-index mapping — one definition, shared by the batch
     * env and the streaming-served env
     * ([[graft.streaming.StreamingDsl.servedEnv]]), so a served read
@@ -91,8 +97,9 @@ object DslQueries {
     idColumn = "doc_id",
     tsFields = Set.empty)
 
+  /** Documents-source env (the text-search surface). */
   def docEnv(spark: SparkSession, dir: String): Env = Env(
-    indices = Map("docs-*" -> Tables.documents(spark, dir)),
+    indices = Map("docs-*" -> SourceCache.table(spark, dir, "documents")),
     mapping = DocMapping)
 
   /** Embeddings-source env (the knn surface). Carries the AUTO-SIZED
@@ -104,7 +111,7 @@ object DslQueries {
     * keeps a probe's candidate stream ~√N instead of N/nlist.
     */
   def embEnv(spark: SparkSession, dir: String): Env = Env(
-    indices = Map("emb-*" -> Tables.embeddings(spark, dir)),
+    indices = Map("emb-*" -> SourceCache.table(spark, dir, "embeddings")),
     mapping = Mapping(
       fields = Map("embedding" -> "embedding", "label" -> "label"),
       idColumn = "vec_id",
@@ -156,19 +163,8 @@ object DslQueries {
     * the BatchScan, plan-asserted in PlanAuditSpec), the way the
     * reference's search POST carries its query to Elasticsearch.
     */
-  def signalEnvEs(spark: SparkSession, dir: String): Env = {
-    val reg = SourceRegistry.forDirEs(dir)
-    val sig = Tables.signalsFrom(Tables.eventsFrom(reg.read(spark, "signals_apm")))
-    val logs = Tables.signalsFrom(Tables.eventsFrom(reg.read(spark, "signals_logs")))
-    val bound = Tables.maxBound(sig, "ts") match {
-      case t: java.sql.Timestamp => t
-      case _ => null
-    }
-    Env(
-      indices = Map(ApmPattern -> sig, LogsPattern -> logs),
-      mapping = SignalMapping,
-      now = bound)
-  }
+  def signalEnvEs(spark: SparkSession, dir: String): Env =
+    signalEnvOf(spark, SourceRegistry.forDirEs(dir))
 
   /** [[SearchBody]] compiled against the connector-backed env —
     * registered as `dsl_search_es` with the SAME oracle as
@@ -716,13 +712,17 @@ object DslQueries {
     * derivation), `location` mapped to the stored (lat, lon) integer
     * pair exactly as a real deployment indexes a geo_point.
     */
-  def geoEnv(spark: SparkSession, dir: String): Env = Env(
-    indices = Map("geo-*" -> GeoOps.attachCoords(Tables.events(spark, dir))),
-    mapping = Mapping(
-      fields = Map("event.type" -> "event_type", "value" -> "value"),
-      idColumn = "event_id",
-      tsFields = Set.empty,
-      geoFields = Map("location" -> (("lat_micro", "lon_micro")))))
+  def geoEnv(spark: SparkSession, dir: String): Env = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Env(
+      indices = Map("geo-*" -> GeoOps.attachCoords(
+        Tables.eventsFrom(SourceCache.table(spark, dir, "events")))),
+      mapping = Mapping(
+        fields = Map("event.type" -> "event_type", "value" -> "value"),
+        idColumn = "event_id",
+        tsFields = Set.empty,
+        geoFields = Map("location" -> (("lat_micro", "lon_micro")))))
+  }
 
   /** Geo filter clauses: the GeoOps bbox as a `geo_bounding_box` (four
     * inclusive integer compares) intersected with a `geo_distance`
@@ -786,11 +786,6 @@ object DslQueries {
   def dslGeohashGrid(spark: SparkSession, dir: String): DataFrame =
     QueryDsl.search(geoEnv(spark, dir), GeohashGridBody)
 
-  /** Multimodal-index env: one index carrying BOTH the analyzed text
-    * and the embedding (documents ⋈ embeddings on the shared 0..N id
-    * space) — the shape a real ES hybrid-search index has, and the
-    * source the `rank: {rrf}` request reads.
-    */
   /** THE hybrid-index mapping — one definition shared by the batch env
     * and the streaming-served env
     * ([[graft.streaming.StreamingDsl.servedHybridEnv]]), the same
@@ -802,9 +797,14 @@ object DslQueries {
     idColumn = "doc_id",
     tsFields = Set.empty)
 
+  /** Multimodal-index env: one index carrying BOTH the analyzed text
+    * and the embedding (documents ⋈ embeddings on the shared 0..N id
+    * space) — the shape a real ES hybrid-search index has, and the
+    * source the `rank: {rrf}` request reads.
+    */
   def hybridEnv(spark: SparkSession, dir: String): Env = {
-    val docs = Tables.documents(spark, dir)
-    val embs = Tables.embeddings(spark, dir)
+    val docs = SourceCache.table(spark, dir, "documents")
+    val embs = SourceCache.table(spark, dir, "embeddings")
       .withColumnRenamed("vec_id", "doc_id")
     Env(
       indices = Map("hybrid-*" -> docs.join(embs, Seq("doc_id"))),

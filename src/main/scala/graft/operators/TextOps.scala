@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{SourceCache, Tables}
 
 /** Text-analysis and deduplication operators for large-scale training-data
   * pipelines, over the `documents` table.
@@ -85,7 +85,9 @@ object TextOps {
   }
 
   /** Unpersist and forget every memoized artifact of `spark` — the
-    * end-of-pipeline hook Verify/Bench call before session stop.
+    * end-of-pipeline hook Verify/Bench call before session stop — and
+    * its resolved sources ([[SourceCache]]), so the next build resolves
+    * again.
     *
     * Sibling-session subtlety: the CacheManager lives in SharedState,
     * so two sessions of one SparkContext that memoize the same
@@ -105,6 +107,7 @@ object TextOps {
       }
     }
     bm25StatsCache.filterInPlace { case ((s, _), _) => s != mine }
+    SourceCache.release(spark)
   }
 
   /** Persistent-RDD ids this session's memoized artifacts DEPEND on:

@@ -30,6 +30,9 @@ final case class SourceRef(
     format: String = "parquet",
     options: Map[String, String] = Map.empty) {
   require(paths.nonEmpty, s"source '$name' has no paths")
+
+  def read(spark: SparkSession): DataFrame =
+    spark.read.format(format).options(options).load(paths: _*)
 }
 
 final class SourceRegistry(sources: Map[String, SourceRef]) {
@@ -41,10 +44,7 @@ final class SourceRegistry(sources: Map[String, SourceRef]) {
     sources.getOrElse(name, throw new IllegalArgumentException(
       s"unknown source '$name'; valid sources: ${sources.keys.toSeq.sorted.mkString(", ")}"))
 
-  def read(spark: SparkSession, name: String): DataFrame = {
-    val ref = resolve(name)
-    spark.read.format(ref.format).options(ref.options).load(ref.paths: _*)
-  }
+  def read(spark: SparkSession, name: String): DataFrame = resolve(name).read(spark)
 
   def names: Seq[String] = sources.keys.toSeq.sorted
 }

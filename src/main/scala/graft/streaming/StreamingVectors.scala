@@ -137,12 +137,6 @@ object StreamingVectors {
       .reduce(_.unionAll(_))
   }
 
-  /** The newest retrained codebook — what searches broadcast. */
-  def readCodebook(spark: SparkSession, storePath: String): DataFrame = {
-    val v = listIds(spark, s"$storePath/codebook", "version").max
-    spark.read.parquet(s"$storePath/codebook/version=$v")
-  }
-
   /** The read side of the refreshing index: the newest full
     * re-assignment version v, plus the delta batches that arrived
     * after it (each assigned under codebook v — the newest below

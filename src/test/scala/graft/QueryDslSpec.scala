@@ -989,4 +989,90 @@ class QueryDslSpec extends SparkSpec {
     assert(tagged.count() === sig.where(size(col("service_tags")) > 0).count())
     assert(tagged.count() < sig.count(), "the empty-array rows must be excluded")
   }
+
+  /** Spark jobs `f` starts, threads it creates included (they inherit
+    * the probe's local property). The listener bus is asynchronous, so
+    * a trailing marker job flushes it: its start arrives after every
+    * earlier job's.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val token = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.probe")).foreach { p =>
+          if (p == token) jobs.incrementAndGet()
+          else if (p == s"$token/end") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", token)
+      f
+      sc.setLocalProperty("graft.probe", s"$token/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      jobs.get
+    } finally {
+      sc.setLocalProperty("graft.probe", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The fixture's events, normalized, with `ts` shifted by `days`. */
+  private def eventsShifted(days: Int) =
+    graft.sources.Tables.events(spark, sfDir).drop("__ts_nanos", "__ts_raw")
+      .withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
+
+  test("env sources resolve once per file generation: a second build starts no job") {
+    Seq[() => QueryDsl.Env](() => DslQueries.signalEnv(spark, sfDir),
+        () => DslQueries.docEnv(spark, sfDir), () => DslQueries.embEnv(spark, sfDir))
+      .foreach { build =>
+        build()
+        assert(jobsOf(build()) === 0)
+      }
+  }
+
+  test("rewriting a source's files is a new generation: now and the page move") {
+    val dir = tempTableDir("events", eventsShifted(0))
+    val now0 = DslQueries.signalEnv(spark, dir).now
+    val page0 = rows(DslQueries.dslSearch(spark, dir))
+    eventsShifted(3).coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val now1 = DslQueries.signalEnv(spark, dir).now
+    assert(now1.toInstant === now0.toInstant.plus(java.time.Duration.ofDays(3)))
+    val page1 = rows(DslQueries.dslSearch(spark, dir))
+    assert(page1.nonEmpty && page1 != page0)
+  }
+
+  test("TextOps.release drops the resolved sources: the next build resolves again") {
+    DslQueries.signalEnv(spark, sfDir)
+    assert(jobsOf(DslQueries.signalEnv(spark, sfDir)) === 0)
+    graft.operators.TextOps.release(spark)
+    assert(jobsOf(DslQueries.signalEnv(spark, sfDir)) > 0)
+  }
+
+  test("concurrent first builds of one env resolve it once") {
+    val events = eventsShifted(0)
+    val (one, dir) = (tempTableDir("events", events), tempTableDir("events", events))
+    val single = jobsOf(DslQueries.signalEnv(spark, one))
+    assert(single > 0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val nows = new java.util.concurrent.ConcurrentLinkedQueue[java.sql.Timestamp]()
+    val concurrent = jobsOf {
+      val threads = (1 to 4).map(_ => new Thread(() => {
+        start.await()
+        nows.add(DslQueries.signalEnv(spark, dir).now)
+      }))
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join())
+    }
+    assert(nows.size === 4)
+    assert(nows.toArray.distinct.length === 1)
+    assert(concurrent === single)
+  }
 }
