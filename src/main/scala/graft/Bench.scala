@@ -34,6 +34,24 @@ object Bench {
     }
   }
 
+  /** Times `runs` drives of one query. A run that throws gives no
+    * sample: its exception-path seconds measure the failure, not the
+    * plan. The last error rides beside the samples that did finish.
+    */
+  private[graft] def timeRuns(runs: Int)(drive: => Unit): (Seq[Double], Option[Throwable]) = {
+    var err: Option[Throwable] = None
+    val samples = (1 to runs).flatMap { _ =>
+      val t0 = System.nanoTime()
+      try { drive; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => err = Some(e); None }
+    }
+    (samples, err)
+  }
+
+  /** A JSON string literal (quoted, escaped) for an error message. */
+  private[graft] def jsonString(s: String): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(s)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -84,6 +102,7 @@ object Bench {
     // driver-budget cost); per-entry seconds remain each entry's own
     // wall and may sum past the block under overlap.
     val warmupByEntry = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val warmupErrors = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val warmupWall0 = System.nanoTime()
     // Overlap degree is a measurement knob, not a scale constant: 4
     // halves warmup wall on this box, but the right value depends on
@@ -95,7 +114,10 @@ object Bench {
       pool.submit(new Runnable {
         def run(): Unit = {
           val t0 = System.nanoTime()
-          try drive(w, sweep = false) catch { case _: Throwable => () }
+          try drive(w, sweep = false) catch { case e: Throwable =>
+            System.err.println(s"[bench] warmup $w FAILED: ${e.getMessage}")
+            warmupErrors.put(w, String.valueOf(e.getMessage))
+          }
           warmupByEntry.put(w, (System.nanoTime() - t0) / 1e9)
         }
       })
@@ -163,20 +185,23 @@ object Bench {
     canaryPre.foreach(p => System.err.println(
       s"[bench] canary pre: instability ${fmt(BenchSanity.instability(p), 2)}"))
     val gcByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+    // a query whose every run failed has no time: it is listed under
+    // `failed` in the full artifact and left out of `queries` and total
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val results = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val g0 = gcMillis()
-      val samples = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try drive(name) catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val secs = samples.min
+      val (samples, err) = timeRuns(2)(drive(name))
+      err.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
       val gcDelta = gcMillis() - g0
       gcByQuery(name) = gcDelta
-      System.err.println(f"[bench] $name%-22s ${secs}%8.3f s  (runs: ${samples.map(s => f"$s%.3f").mkString("/")})  gc+$gcDelta%5d ms")
-      name -> secs
+      if (samples.isEmpty) {
+        failed(name) = String.valueOf(err.map(_.getMessage).orNull)
+        None
+      } else {
+        val secs = samples.min
+        System.err.println(f"[bench] $name%-22s ${secs}%8.3f s  (runs: ${samples.map(s => f"$s%.3f").mkString("/")})  gc+$gcDelta%5d ms")
+        Some(name -> secs)
+      }
     }.toMap
     val canaryPost = canaryProbe("post")
     val canaryJson = (canaryPre, canaryPost) match {
@@ -267,8 +292,13 @@ object Bench {
     val warmupFull = SparkEntry.warmups
       .map(w => "\"" + w + "\":" + warmupByEntry.getOrDefault(w, 0.0))
       .mkString("{", ",", "}")
+    val warmupErrorsFull = SparkEntry.warmups.filter(warmupErrors.containsKey)
+      .map(w => "\"" + w + "\":" + jsonString(warmupErrors.get(w)))
+      .mkString("{", ",", "}")
+    val failedFull = failed.map { case (k, e) =>
+      s"""{"name":"$k","error":${jsonString(e)}}""" }.mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpu":$cpuSecs,"warmup_secs":$warmupSecs,"warmup_by_entry":$warmupFull,$canaryJson,"queries":$full,"gc_ms":$gcFull,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpu":$cpuSecs,"warmup_secs":$warmupSecs,"warmup_by_entry":$warmupFull,"warmup_errors":$warmupErrorsFull,$canaryJson,"queries":$full,"failed":$failedFull,"gc_ms":$gcFull,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("/tmp/bench.json"), fullJson)
     try Files.writeString(Paths.get("/root/repo/BENCH_FULL.json"), fullJson + "\n")
     catch { case _: Throwable => () }

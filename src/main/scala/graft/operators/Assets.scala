@@ -24,6 +24,14 @@ import graft.sources.{AssetSchema, SourceRegistry, Tables}
   * data-dependent phase-2 `terms` query becomes a broadcast semi-join.
   * Nothing here collects to the driver, so every pipeline scales with
   * executors × partitions.
+  *
+  * Several outputs over one source are derived inside ONE plan, not as
+  * a union of per-output plans: [[assetsAllFrom]] scans the signals
+  * once, tags each row with the collapse keys it feeds, collapses all
+  * keys in one window and aggregates every asset in one `groupBy`. A
+  * union of branches does not share its scan — Catalyst prunes columns
+  * and pushes filters into each branch separately, so the branches'
+  * scans and exchanges differ and `ReuseExchange` never merges them.
   */
 object Assets {
 
@@ -188,8 +196,8 @@ object Assets {
     * declaring the window and letting the optimizer place the cut
     * beats hand-scheduling it.
     */
-  def collapseLatest(df: DataFrame, key: String): DataFrame = {
-    val w = Window.partitionBy(col(key))
+  def collapseLatest(df: DataFrame, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("ts").desc, col("event_id").desc)
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
@@ -232,18 +240,31 @@ object Assets {
     * container (J2 forward edge).
     */
   def serviceAssetProjection(collapsed: DataFrame, ts: Column): DataFrame =
-    collapsed.select(
-      ts.as("asset_ts"),
-      ean("service", col("service_name")).as("asset_ean"),
-      lit("service").as("asset_type"),
-      col("service_name").as("asset_id"),
-      col("service_name").as("asset_name"),
-      col("service_environment"),
-      col("cloud_provider"),
-      col("orchestrator_cluster_name"),
-      when(col("container_id").isNotNull, ean("container", col("container_id")))
-        .as("asset_parents")
-    )
+    collapsed.select(ts.as("asset_ts") +: named(serviceFields): _*)
+
+  private def serviceFields: Seq[(String, Column)] = Seq(
+    "asset_ean" -> serviceEan,
+    "asset_type" -> lit("service"),
+    "asset_id" -> col("service_name"),
+    "asset_name" -> col("service_name"),
+    "service_environment" -> col("service_environment"),
+    "cloud_provider" -> col("cloud_provider"),
+    "orchestrator_cluster_name" -> col("orchestrator_cluster_name"),
+    "asset_parents" -> containerEdge)
+
+  private def named(fields: Seq[(String, Column)]): Seq[Column] =
+    fields.map { case (n, c) => c.as(n) }
+
+  // Edge EANs shared by the per-kind pipelines and [[assetsAllFrom]];
+  // the conditional ones are NULL when the referenced field is absent
+  private def serviceEan: Column = ean("service", col("service_name"))
+  private def podEan: Column = ean("k8s.pod", col("kubernetes_pod_uid"))
+  private def containerEdge: Column =
+    when(col("container_id").isNotNull, ean("container", col("container_id")))
+  private def podEdge: Column = when(col("kubernetes_pod_uid").isNotNull, podEan)
+  private def clusterEdge: Column =
+    when(col("orchestrator_cluster_name").isNotNull,
+      ean("k8s.cluster", col("orchestrator_cluster_name")))
 
   def servicesCollapse(spark: SparkSession, dir: String): DataFrame =
     serviceAssetProjection(collapsedServiceSignals(spark, dir), batchTs)
@@ -264,12 +285,8 @@ object Assets {
       .where(col("container_id").isNotNull)
       .groupBy(col("container_id"))
       .agg(
-        edgeList(collect_set(ean("service", col("service_name"))))
-          .as("asset_children"),
-        edgeList(collect_set(
-          when(col("kubernetes_pod_uid").isNotNull,
-            ean("k8s.pod", col("kubernetes_pod_uid")))))
-          .as("asset_references")
+        edgeList(collect_set(serviceEan)).as("asset_children"),
+        edgeList(collect_set(podEdge)).as("asset_references")
       )
       .select(
         ts.as("asset_ts"),
@@ -309,17 +326,15 @@ object Assets {
     * (and by QueryDslSpec's verbatim-body replay).
     */
   private[graft] def podAssets(collapsed: DataFrame): DataFrame =
-    collapsed.select(
-      batchTs.as("asset_ts"),
-      ean("k8s.pod", col("kubernetes_pod_uid")).as("asset_ean"),
-      lit("k8s.pod").as("asset_type"),
-      col("kubernetes_pod_uid").as("asset_id"),
-      ean("k8s.node", col("kubernetes_node_name")).as("asset_parents"),
-      when(col("orchestrator_cluster_name").isNotNull,
-        ean("k8s.cluster", col("orchestrator_cluster_name")))
-        .as("asset_references"),
-      col("cloud_provider")
-    )
+    collapsed.select(batchTs.as("asset_ts") +: named(podFields): _*)
+
+  private def podFields: Seq[(String, Column)] = Seq(
+    "asset_ean" -> podEan,
+    "asset_type" -> lit("k8s.pod"),
+    "asset_id" -> col("kubernetes_pod_uid"),
+    "asset_parents" -> ean("k8s.node", col("kubernetes_node_name")),
+    "asset_references" -> clusterEdge,
+    "cloud_provider" -> col("cloud_provider"))
 
   /** Pod assets — reference lib/collectPods.ts:72-88: parent = node EAN,
     * reference edge to the orchestrator cluster when present (:80-86).
@@ -406,22 +421,94 @@ object Assets {
 
   /** [[assetsAll]] over ANY signal view — the seam [[graft.Run]] uses
     * to honor `--read`: the registry-resolved source (single- or
-    * multi-path, any connector format) feeds the same four pipelines.
+    * multi-path, any connector format) feeds one plan that returns
+    * exactly the rows of the four per-kind pipelines
+    * ([[serviceAssetProjection]], [[containerAssets]], [[podAssets]],
+    * [[nodeAssets]]) unioned:
+    *   1. ONE eager bound fetch ([[Tables.maxBound]]), applied as a
+    *      literal 21-day window (the [[servicesFromSummaries]]
+    *      discipline);
+    *   1. ONE pruned, windowed scan, whose rows are tagged by an
+    *      `explode` with up to two collapse keys: `("svc",
+    *      service_name)` for service candidates and `("pod",
+    *      kubernetes_pod_uid)` for pod candidates;
+    *   1. ONE [[collapseLatest]] window on `(kind, key)`, so the
+    *      partial `WindowGroupLimit` still cuts each map task to one
+    *      row per key before the exchange;
+    *   1. ONE `explode` of per-asset contributions — each collapsed
+    *      service (pod) row is its own asset plus one edge of its
+    *      container (node) — and ONE `groupBy(asset_ean)` that
+    *      collects the edge sets of the graph kinds with [[edgeList]].
+    *
+    * A union of the four per-kind pipelines would not share its scan:
+    * Catalyst prunes columns and pushes filters into each branch
+    * separately, so the branch scans differ and `ReuseExchange` never
+    * merges them. Every branch would re-read the whole source, re-parse
+    * `props` and re-sort it for its own window.
     */
   def assetsAllFrom(sig: DataFrame): DataFrame = {
-    // ONE eager bound fetch, shared by all four pipelines as a literal
-    // (the servicesFromSummaries discipline): round 2 let each pipeline
-    // re-derive its own trailing bound — 8 driver-blocking scan jobs
-    // before the real action.
     val bound = Tables.maxBound(sig, "ts")
-    val svc = collapsedServiceSignalsFrom(sig, "21 DAY", bound)
-    val pod = collapsedPodSignalsFrom(sig, bound)
-    val parts = Seq(
-      serviceAssetProjection(svc, batchTs),
-      containerAssets(svc, batchTs),
-      podAssets(pod),
-      nodeAssets(pod))
-    parts.map(AssetSchema.conform).reduce(_.unionAll(_))
+    val svcCandidate = col("service_name").isNotNull && hasParentCandidate
+    val podCandidate =
+      col("kubernetes_pod_uid").isNotNull && col("kubernetes_node_name").isNotNull
+    val tagged = Tables.trailingWithBound(sig, "ts", "21 DAY", bound)
+      .where(svcCandidate || podCandidate)
+      .withColumn("__tag", explode(array(
+        when(svcCandidate, struct(lit("svc").as("kind"), col("service_name").as("key"))),
+        when(podCandidate,
+          struct(lit("pod").as("kind"), col("kubernetes_pod_uid").as("key"))))))
+      .where(col("__tag").isNotNull)
+      .withColumn("__kind", col("__tag.kind"))
+      .withColumn("__key", col("__tag.key"))
+    val contributions = collapseLatest(tagged, "__kind", "__key")
+      .select(explode(
+        when(col("__kind") === "svc", array(
+          contribution(serviceFields),
+          when(col("container_id").isNotNull, contribution(Seq(
+            "asset_ean" -> ean("container", col("container_id")),
+            "asset_type" -> lit("container"),
+            "asset_id" -> col("container_id"),
+            "asset_children" -> serviceEan,
+            "asset_references" -> podEdge)))))
+        .otherwise(array(
+          contribution(podFields),
+          contribution(Seq(
+            "asset_ean" -> ean("k8s.node", col("kubernetes_node_name")),
+            "asset_type" -> lit("k8s.node"),
+            "asset_id" -> col("kubernetes_node_name"),
+            "asset_children" -> podEan,
+            "asset_references" -> clusterEdge))))).as("__a"))
+      .where(col("__a").isNotNull)
+      .select("__a.*")
+    // service and pod assets have exactly one contribution, so `max`
+    // returns it; container and node assets are sets of edges
+    val scalars = ContributionFields.filterNot(f => f == "asset_ean" || EdgeFields.contains(f))
+    val aggs = scalars.map(f => max(col(f)).as(f)) ++ EdgeFields.flatMap(f =>
+      Seq(max(col(f)).as(f), collect_set(col(f)).as(s"__$f")))
+    val graphKind = col("asset_type").isin("container", "k8s.node")
+    AssetSchema.conform(contributions
+      .groupBy(col("asset_ean"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(batchTs.as("asset_ts") +: col("asset_ean") +: scalars.map(col) ++:
+        EdgeFields.map(f =>
+          when(graphKind, edgeList(col(s"__$f"))).otherwise(col(f)).as(f)): _*))
+  }
+
+  private val EdgeFields = Seq("asset_children", "asset_references")
+
+  /** Every conformed asset column except `asset_ts`: the fields one
+    * [[assetsAllFrom]] contribution carries. */
+  private val ContributionFields =
+    AssetSchema.schema.fieldNames.toSeq.filterNot(_ == "asset_ts")
+
+  /** One asset's share of a collapsed row as a struct over
+    * [[ContributionFields]]; fields the kind lacks are typed NULLs, so
+    * every kind's struct has the one type an `explode` array needs.
+    */
+  private def contribution(fields: Seq[(String, Column)]): Column = {
+    val m = fields.toMap
+    struct(ContributionFields.map(f =>
+      m.getOrElse(f, lit(null).cast("string")).as(f)): _*)
   }
 
   /** Node assets — reference lib/collectPods.ts:90-112: find-or-create
@@ -436,12 +523,8 @@ object Assets {
     collapsed
       .groupBy(col("kubernetes_node_name"))
       .agg(
-        edgeList(collect_set(ean("k8s.pod", col("kubernetes_pod_uid"))))
-          .as("asset_children"),
-        edgeList(collect_set(
-          when(col("orchestrator_cluster_name").isNotNull,
-            ean("k8s.cluster", col("orchestrator_cluster_name")))))
-          .as("asset_references")
+        edgeList(collect_set(podEan)).as("asset_children"),
+        edgeList(collect_set(clusterEdge)).as("asset_references")
       )
       .select(
         batchTs.as("asset_ts"),
@@ -582,9 +665,8 @@ object Assets {
     * sets. One full-outer shuffle on asset_ean.
     */
   def upsertAssetsMergeEdges(state: DataFrame, batch: DataFrame): DataFrame = {
-    val edgeCols = Seq("asset_children", "asset_references")
     val scalarCols = AssetSchema.schema.fieldNames.toSeq
-      .filterNot(edgeCols.contains).filterNot(_ == "asset_ean")
+      .filterNot(EdgeFields.contains).filterNot(_ == "asset_ean")
     val s = AssetSchema.conform(state).columns.foldLeft(AssetSchema.conform(state)) {
       (df, c) => if (c == "asset_ean") df else df.withColumnRenamed(c, s"s_$c")
     }
@@ -597,7 +679,7 @@ object Assets {
       Seq(col("asset_ean")) ++
         scalarCols.map(c =>
           when(batchWins, col(s"b_$c")).otherwise(col(s"s_$c")).as(c)) ++
-        edgeCols.map(c =>
+        EdgeFields.map(c =>
           when(col(s"s_$c").isNull && col(s"b_$c").isNull, lit(null).cast("string"))
             .otherwise(mergeEdgeLists(col(s"s_$c"), col(s"b_$c"))).as(c)): _*)
     AssetSchema.conform(merged)

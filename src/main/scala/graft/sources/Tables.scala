@@ -197,10 +197,11 @@ object Tables {
 
   /** The dataset's max timestamp, fetched eagerly — the date-math
     * resolution step. Callers composing SEVERAL windowed pipelines over
-    * one source (e.g. [[graft.operators.Assets.assetsAll]]) must fetch
-    * this ONCE and thread it through [[trailingWithBound]]: each fetch
-    * is a full (column-pruned) scan job, and round 2 measured 8 of them
-    * per assets_all run before the real action started.
+    * one source (e.g. [[graft.operators.Assets.assetUpsert]]) must
+    * fetch this ONCE and thread it through [[trailingWithBound]]: each
+    * fetch is a full (column-pruned) scan job that runs before the real
+    * action. [[graft.operators.Assets.assetsAll]] fetches it once for
+    * its one windowed scan.
     */
   def maxBound(df: DataFrame, tsCol: String): Any =
     df.agg(max(col(tsCol))).head().get(0)

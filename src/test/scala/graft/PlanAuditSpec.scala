@@ -160,6 +160,29 @@ class PlanAuditSpec extends SparkSpec {
       s"assetsAll plan-time jobs $planTime != single bound fetch $baseline")
   }
 
+  test("assetsAll reads the signal source once") {
+    // the four asset kinds come out of ONE scan, ONE collapse exchange
+    // on the (kind, key) pair and ONE aggregate exchange on asset_ean;
+    // a union of per-kind branches would re-scan events per branch
+    val df = SparkEntry.queries("assets_all")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    // AQE prints every stage under both plan sections: read the final one
+    val fin = p.split("== Initial Plan ==")(0).split("\n").toSeq
+    assert(fin.count(l => l.contains("FileScan parquet") && l.contains("events.parquet")) === 1,
+      p.take(3000))
+    val exchanges = fin.filter(_.contains("Exchange hashpartitioning("))
+    assert(exchanges.size === 2, p.take(3000))
+    val keys = exchanges.map("hashpartitioning\\(([^)]*)\\)".r.findFirstMatchIn(_).get.group(1)
+      .split(", ").filter(_.contains("#")).map(_.takeWhile(_ != '#')).toSeq)
+    assert(keys.toSet === Set(Seq("__kind", "__key"), Seq("asset_ean")), p.take(3000))
+    // the partial group limit sits below (after, in the tree string)
+    // the collapse exchange, so the shuffle carries ~1 row per key
+    val collapse = fin.indexWhere(_.contains("Exchange hashpartitioning(__kind"))
+    val partial = fin.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    assert(collapse >= 0 && partial > collapse, p.take(3000))
+  }
+
   test("dedup_embedding generates candidates via band equi-join, never a cross join") {
     val df = SparkEntry.queries("dedup_embedding")(spark, sfDir)
     df.collect()
