@@ -20,18 +20,56 @@ object Bench {
     * 1.4 s here once clean). Sweeping INSIDE `drive` (so each query
     * pays for its own garbage) drops every locally-checkpointed RDD
     * the moment its action has returned, EXCEPT the checkpoint RDDs
-    * memoized artifacts scan ([[graft.operators.TextOps.memoPinnedRddIds]]
+    * memoized artifacts scan ([[graft.sources.Artifacts.pinnedRddIds]]
     * — those blocks are the only copy and live for the session, which
     * is the memo discipline working). Dataset-level memo caches are
     * not locally checkpointed and are never touched.
     */
   def sweepCheckpoints(spark: SparkSession): Unit = {
-    val pinned = graft.operators.TextOps.memoPinnedRddIds(spark)
+    val pinned = graft.sources.Artifacts.pinnedRddIds(spark)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (org.apache.spark.rdd.GraftRddInspect.isLocallyCheckpointed(rdd) &&
           !pinned.contains(id))
         rdd.unpersist(blocking = false)
     }
+  }
+
+  /** The drivers' one session (Bench, TimeQueries, DumpPlans, Verify,
+    * Run): `local[SPARK_GRAFT_CPUS]`, default 4, with as many shuffle
+    * partitions, so every driver plans what Bench measures.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet carries TIMESTAMP(NANOS); set at bootstrap so
+      // table loaders stay side-effect free (see Tables.events).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Runs registry query `name` into a full-width sink: hash every
+    * output column and fold, so Catalyst cannot prune unreferenced
+    * columns the way a bare .count() lets it (projection queries would
+    * otherwise measure scan-only). The fold is bit_xor, NOT sum:
+    * summing 64-bit hashes overflows almost immediately under ANSI mode
+    * and would abort the query mid-scan, silently under-measuring it.
+    *
+    * `sweep` must be false when drives overlap (the warmup pool): a
+    * sweep from one thread would drop a concurrent query's in-flight
+    * checkpoint blocks mid-action. Sequential loops sweep after every
+    * action so each query pays for its own garbage.
+    */
+  def drive(spark: SparkSession, sfDir: String, name: String, sweep: Boolean = true): Unit = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.select(xxhash64(df.columns.map(col): _*).as("h"))
+      .agg(expr("bit_xor(h)")).head()
+    if (sweep) sweepCheckpoints(spark)
   }
 
   /** Times `runs` drives of one query. A run that throws gives no
@@ -54,31 +92,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Full-width sink: hash every output column and fold, so Catalyst
-    // cannot prune unreferenced columns the way a bare .count() lets it
-    // (projection queries would otherwise measure scan-only). The fold
-    // is bit_xor, NOT sum: summing 64-bit hashes overflows almost
-    // immediately under ANSI mode and would abort the query mid-scan,
-    // silently under-measuring it.
-    // `sweep` must be false when drives overlap (the warmup pool): a
-    // sweep from one thread would drop a concurrent query's in-flight
-    // checkpoint blocks mid-action. The sequential timed loop sweeps
-    // after every action so each query pays for its own garbage.
-    def drive(name: String, sweep: Boolean = true): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
-      if (sweep) sweepCheckpoints(spark)
-    }
+    val spark = session()
+    def drive(name: String, sweep: Boolean = true): Unit = Bench.drive(spark, sfDir, name, sweep)
     // Untimed warmup, registry-owned (SparkEntry.warmups — see the
     // rationale there): JVM/codegen/parquet-footer startup plus every
     // build-once-per-session memoized artifact lands here instead of
@@ -95,8 +110,8 @@ object Bench {
     // small thread pool (guide §2.6: Spark happily schedules several
     // jobs at once; the next entry's tasks backfill executors idled by
     // the current entry's single-threaded tail — kmeans round
-    // boundaries, window sorts). Memo builds are per-key locked
-    // (TextOps.memoLocks) and the Layout writes are object-
+    // boundaries, window sorts). Artifact builds lock their slot
+    // (graft.sources.Artifacts) and the Layout writes are object-
     // synchronized, so concurrent entries cannot double-build or leak.
     // warmup_secs is now WALL time of the whole block (the honest
     // driver-budget cost); per-entry seconds remain each entry's own
@@ -301,7 +316,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","cpu":$cpuSecs,"warmup_secs":$warmupSecs,"warmup_by_entry":$warmupFull,"warmup_errors":$warmupErrorsFull,$canaryJson,"queries":$full,"failed":$failedFull,"gc_ms":$gcFull,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("/tmp/bench.json"), fullJson)
     try Files.writeString(Paths.get("/root/repo/BENCH_FULL.json"), fullJson + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json write FAILED: $e") }
     graft.operators.TextOps.release(spark)
     spark.stop()
   }

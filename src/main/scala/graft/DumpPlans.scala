@@ -2,29 +2,19 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dumper: `runMain graft.DumpPlans <tag> q1 q2 ...`
   * writes each named registry query's `explain("formatted")` output to
   * `plans/<tag>/<query>.txt` — the committed before/after artifact the
   * optimization rounds' judge checks plan claims against (guide §7.2).
-  * Reads `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` like [[Bench]] so
-  * the dumped plan is the benched plan.
+  * Reads `SPARK_GRAFT_SF_DIR` and opens [[Bench.session]] so the
+  * dumped plan is the benched plan.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: DumpPlans <outDir> <query> [query ...]")
     val outDir = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     args.drop(1).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

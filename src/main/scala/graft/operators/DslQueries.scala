@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.QueryDsl
 import graft.plans.QueryDsl.{Env, Mapping}
-import graft.sources.{SourceCache, SourceRegistry, Tables}
+import graft.sources.{Artifacts, SourceRegistry, Tables}
 
 /** Registered queries that run END-TO-END through the
   * [[graft.plans.QueryDsl]] compiler — the engine consumed the way the
@@ -63,7 +63,7 @@ object DslQueries {
     * ([[Tables.maxBound]]'s date-math determinism device).
     *
     * The scans and `now` resolve once per FILE GENERATION
-    * ([[SourceCache]]), as this file's other envs' scans do: requests
+    * ([[Artifacts]]), as this file's other envs' scans do: requests
     * between two writes share one resolution (the reference searches
     * an index whose mapping is already resolved), and the first
     * request after any file under a source changes resolves again and
@@ -78,8 +78,8 @@ object DslQueries {
     * `signals_logs` refs; `now` is the APM source's bound.
     */
   private def signalEnvOf(spark: SparkSession, reg: SourceRegistry): Env = {
-    val apm = SourceCache.resolve(spark, reg.resolve("signals_apm"))
-    val logs = SourceCache.resolve(spark, reg.resolve("signals_logs"))
+    val apm = Artifacts.resolve(spark, reg.resolve("signals_apm"))
+    val logs = Artifacts.resolve(spark, reg.resolve("signals_logs"))
     Env(
       indices = Map(ApmPattern -> apm.signals, LogsPattern -> logs.signals),
       mapping = SignalMapping,
@@ -99,7 +99,7 @@ object DslQueries {
 
   /** Documents-source env (the text-search surface). */
   def docEnv(spark: SparkSession, dir: String): Env = Env(
-    indices = Map("docs-*" -> SourceCache.table(spark, dir, "documents")),
+    indices = Map("docs-*" -> Artifacts.table(spark, dir, "documents")),
     mapping = DocMapping)
 
   /** Embeddings-source env (the knn surface). Carries the AUTO-SIZED
@@ -111,7 +111,7 @@ object DslQueries {
     * keeps a probe's candidate stream ~√N instead of N/nlist.
     */
   def embEnv(spark: SparkSession, dir: String): Env = Env(
-    indices = Map("emb-*" -> SourceCache.table(spark, dir, "embeddings")),
+    indices = Map("emb-*" -> Artifacts.table(spark, dir, "embeddings")),
     mapping = Mapping(
       fields = Map("embedding" -> "embedding", "label" -> "label"),
       idColumn = "vec_id",
@@ -716,7 +716,7 @@ object DslQueries {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Env(
       indices = Map("geo-*" -> GeoOps.attachCoords(
-        Tables.eventsFrom(SourceCache.table(spark, dir, "events")))),
+        Tables.eventsFrom(Artifacts.table(spark, dir, "events")))),
       mapping = Mapping(
         fields = Map("event.type" -> "event_type", "value" -> "value"),
         idColumn = "event_id",
@@ -803,8 +803,8 @@ object DslQueries {
     * source the `rank: {rrf}` request reads.
     */
   def hybridEnv(spark: SparkSession, dir: String): Env = {
-    val docs = SourceCache.table(spark, dir, "documents")
-    val embs = SourceCache.table(spark, dir, "embeddings")
+    val docs = Artifacts.table(spark, dir, "documents")
+    val embs = Artifacts.table(spark, dir, "embeddings")
       .withColumnRenamed("vec_id", "doc_id")
     Env(
       indices = Map("hybrid-*" -> docs.join(embs, Seq("doc_id"))),

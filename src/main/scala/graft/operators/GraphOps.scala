@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Artifacts.{cutLineage, memoized}
 import graft.sources.Tables
 
 /** Graph analytics over relationally-derived edge lists.
@@ -22,7 +23,7 @@ import graft.sources.Tables
   * bounded without checkpoints.
   *
   * Checkpoint discipline: every lineage cut in this module goes
-  * through [[TextOps.cutLineage]] — executor-local checkpoints when no
+  * through [[graft.sources.Artifacts.cutLineage]] — executor-local checkpoints when no
   * checkpoint dir is set (local/test), upgrading to reliable
   * `checkpoint(true)` when `sc.setCheckpointDir` is configured (the
   * cluster deployment signal), so an executor loss mid-loop replays
@@ -41,7 +42,7 @@ object GraphOps {
   /** Lineage cut for the iterative loops below — the shared seam (see
     * the object Scaladoc for the reliable-mode upgrade).
     */
-  private def cut(df: DataFrame): DataFrame = TextOps.cutLineage(df)
+  private def cut(df: DataFrame): DataFrame = cutLineage(df)
 
   /** Row cap for [[incrementalClosure]]'s broadcast hints. The normal
     * arrival path keeps every hinted frame delta-sized (thousands of
@@ -126,7 +127,7 @@ object GraphOps {
     * memo entry regardless of call order or a release between them).
     */
   private[graft] def upwardEdges(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "asset_up_edges") {
+    memoized(spark, dir, "asset_up_edges") {
       val aa = Assets.assetsAll(spark, dir)
         .select(col("asset_ean"), col("asset_parents"),
           col("asset_children"), col("asset_references"))
@@ -148,7 +149,7 @@ object GraphOps {
     * 4-pipeline derivation is the expensive part).
     */
   private[graft] def assetDocs(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "asset_docs") {
+    memoized(spark, dir, "asset_docs") {
       Assets.assetsAll(spark, dir)
     }
 
@@ -160,7 +161,7 @@ object GraphOps {
     * pointers. Memoized alongside [[upwardEdges]].
     */
   private[graft] def parentChildEdges(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "asset_pc_edges") {
+    memoized(spark, dir, "asset_pc_edges") {
       val aa = assetDocs(spark, dir)
         .select(col("asset_ean"), col("asset_parents"), col("asset_children"))
       def nonEmpty(c: String) = col(c).isNotNull && col(c) =!= ""
@@ -248,7 +249,7 @@ object GraphOps {
     * per-level rows on any graph with diamonds), and stops as soon as
     * the frontier is empty. BFS level order IS min-depth order, so no
     * final min() collapse is needed. The edge set and each round's
-    * delta are checkpointed ([[TextOps.cutLineage]] — reliable when a
+    * delta are checkpointed ([[graft.sources.Artifacts.cutLineage]] — reliable when a
     * checkpoint dir is set): rounds scan a materialized table
     * instead of re-planning the whole assets_all lineage, and the loop
     * stays O(1) planning per round (the propagateToFixpoint device).
@@ -470,10 +471,10 @@ object GraphOps {
     // deployment WRITES its ranks once per refresh and every consumer
     // reads the table — in-session, the 5-round build lands in the
     // warmup and steady-state queries read the cache
-    TextOps.memoized(spark, dir, "pagerank_ranks") { pagerankBuild(spark, dir) }
+    memoized(spark, dir, "pagerank_ranks") { pagerankBuild(spark, dir) }
 
   private def pagerankBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = TextOps.memoized(spark, dir, "trade_edges") {
+    val edges = memoized(spark, dir, "trade_edges") {
       val e = tradeEdges(spark, dir)
       val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       e.join(wout, Seq("src"))
@@ -531,7 +532,7 @@ object GraphOps {
     // the minhashSignatures rationale (self-join sides defeat
     // plan-level exchange reuse); at cluster scale the oriented list
     // is the artifact a graph job materializes once
-    val oriented = TextOps.memoized(spark, dir, "triangle_oriented") {
+    val oriented = memoized(spark, dir, "triangle_oriented") {
       val und = tradeEdges(spark, dir)
         .where(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
@@ -644,7 +645,7 @@ object GraphOps {
     */
   def kCore(spark: SparkSession, dir: String): DataFrame =
     // memoized peel result (the pagerank_ranks rationale)
-    TextOps.memoized(spark, dir, "kcore_result") {
+    memoized(spark, dir, "kcore_result") {
       kCorePeel(strongEdges(spark, dir), KCoreK, KCoreRounds)
     }
 
@@ -685,7 +686,7 @@ object GraphOps {
     * (u, v) key the grouping just produced.
     */
   def linkPredict(spark: SparkSession, dir: String): DataFrame = {
-    // Materialized (localCheckpoint, computed inside the query): the
+    // Materialized (cutLineage, computed inside the query): the
     // strong edge set is referenced FIVE times in this plan (both
     // wedge sides through adjD, the degree attach, and the anti-join),
     // and each reference re-derived it from scratch — tradeEdges'
@@ -693,7 +694,7 @@ object GraphOps {
     // Exchanges / 72 parquet scans in the executed plan). The edge
     // list is ≤ |nations|² rows; cutting it makes every downstream
     // step small-data (guide §3.3's duplicate-subtree case).
-    val strong = strongEdges(spark, dir).localCheckpoint()
+    val strong = cut(strongEdges(spark, dir))
     val adj = strong.select(col("a").as("z"), col("b").as("n"))
       .unionAll(strong.select(col("b").as("z"), col("a").as("n")))
     val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("deg"))
@@ -731,10 +732,10 @@ object GraphOps {
     */
   def personalizedPagerank(spark: SparkSession, dir: String): DataFrame =
     // memoized rank artifact (the pagerank_ranks rationale)
-    TextOps.memoized(spark, dir, "ppr_ranks") { pprBuild(spark, dir) }
+    memoized(spark, dir, "ppr_ranks") { pprBuild(spark, dir) }
 
   private def pprBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = TextOps.memoized(spark, dir, "trade_edges") {
+    val edges = memoized(spark, dir, "trade_edges") {
       val e = tradeEdges(spark, dir)
       val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       e.join(wout, Seq("src"))
@@ -790,7 +791,7 @@ object GraphOps {
     * small-star orients edges (larger, smaller) and re-points the node
     * plus every non-min neighbor at the neighborhood min. Each phase
     * is one groupBy + one |V|-row equi-join + one distinct. Lineage is
-    * cut per round through the shared [[TextOps.cutLineage]] seam
+    * cut per round through the shared [[graft.sources.Artifacts.cutLineage]] seam
     * (reliable checkpoints on a cluster). Convergence = a full round
     * leaves the edge set unchanged (symmetric difference empty — two
     * anti-joins); the fixed points of the pair of operations are
@@ -861,10 +862,10 @@ object GraphOps {
     */
   def hits(spark: SparkSession, dir: String): DataFrame =
     // memoized rank artifact (the pagerank_ranks rationale)
-    TextOps.memoized(spark, dir, "hits_ranks") { hitsBuild(spark, dir) }
+    memoized(spark, dir, "hits_ranks") { hitsBuild(spark, dir) }
 
   private def hitsBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = TextOps.memoized(spark, dir, "trade_edges") {
+    val edges = memoized(spark, dir, "trade_edges") {
       val e = tradeEdges(spark, dir)
       val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       e.join(wout, Seq("src"))

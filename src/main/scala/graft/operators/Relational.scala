@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Artifacts.memoized
 import graft.sources.Tables
 
 /** General relational operator library (SURVEY.md §2 generalization,
@@ -2322,7 +2323,7 @@ object Relational {
     // sides, sup, nb) — without the memo the lineitem⋈part distinct
     // re-evaluates per consumer (the recompute pattern dedupContainment
     // / the minhash signatures memoize away)
-    val items = TextOps.memoized(spark, dir, "fp_baskets") {
+    val items = memoized(spark, dir, "fp_baskets") {
       Tables.lineitem(spark, dir)
         .join(broadcast(Tables.part(spark, dir)
           .select(col("p_partkey"), col("p_brand"))),
@@ -2373,7 +2374,7 @@ object Relational {
     * division of exact integer counts).
     */
   def q76FrequentTriples(spark: SparkSession, dir: String): DataFrame = {
-    val items = TextOps.memoized(spark, dir, "fp_baskets") {
+    val items = memoized(spark, dir, "fp_baskets") {
       Tables.lineitem(spark, dir)
         .join(broadcast(Tables.part(spark, dir)
           .select(col("p_partkey"), col("p_brand"))),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Artifacts.{cutLineage, memoized}
+
 /** Hybrid retrieval: lexical (BM25) and vector (exact cosine KNN)
   * rankings fused by Reciprocal Rank Fusion (Cormack, Clarke &
   * Buettcher 2009) — the standard two-tower serving shape (the
@@ -104,20 +106,20 @@ object Retrieval {
     */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     val oml = 1 - MmrLambda
-    // both inputs are memoized artifacts (the TextOps.memoized
+    // both inputs are memoized artifacts (the Artifacts.memoized
     // discipline): the candidate list is a view over the already-
     // memoized exact baseline, and the k²·|Q| pairwise-cosine table is
     // built once per session — the 5 greedy steps then run entirely
     // over cached small frames instead of re-joining the vector store
     // per reference
-    val cands = TextOps.memoized(spark, dir, "mmr_cands") {
+    val cands = memoized(spark, dir, "mmr_cands") {
       VectorOps.knnExact(spark, dir)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("sim").as("rel"))
     }
-    val pairs = TextOps.memoized(spark, dir, "mmr_pairs") {
+    val pairs = memoized(spark, dir, "mmr_pairs") {
       val vecs = VectorOps.withNorm(spark, dir)
-      cands.select(col("query_id"), col("doc_id").as("a"))
+      cutLineage(cands.select(col("query_id"), col("doc_id").as("a"))
         .join(cands.select(col("query_id"), col("doc_id").as("b")), Seq("query_id"))
         .where(col("a") =!= col("b"))
         .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea"),
@@ -126,8 +128,7 @@ object Retrieval {
           col("nrm").as("nb")), Seq("b"))
         .select(col("query_id"), col("a"), col("b"),
           (expr(VectorOps.dot("ea", "eb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-            .as("psim"))
-        .localCheckpoint() // plan-size cut under the memo persist
+            .as("psim"))) // plan-size cut under the memo persist
     }
     // the greedy loop as ONE higher-order-function fold per QUERY ROW
     // (no per-step windows/joins/checkpoints — a DataFrame-level loop
@@ -215,7 +216,7 @@ object Retrieval {
     // (the gauge paid the tower 2×; at 100 TB the duplicated side is a
     // corpus-scale scoring pass). Materialized so the two fusion
     // subtrees share the computed rows rather than the plan.
-    val lex = lexRanks(spark, dir).localCheckpoint()
+    val lex = cutLineage(lexRanks(spark, dir))
     val exact = fuseRrf(lex,
       VectorOps.knnExact(spark, dir)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),

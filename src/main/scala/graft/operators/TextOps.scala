@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{SourceCache, Tables}
+import graft.sources.{Artifacts, Tables}
+import graft.sources.Artifacts.{cutLineage, memoized}
 
 /** Text-analysis and deduplication operators for large-scale training-data
   * pipelines, over the `documents` table.
@@ -19,139 +20,11 @@ import graft.sources.{SourceCache, Tables}
   */
 object TextOps {
 
-  /** Registry of the dedup family's shared persisted artifacts
-    * (minhash signatures, LSH edge set), memoized per (session, dir).
-    *
-    * Round 2 persisted these inside every operator call and never
-    * released them: each call built a fresh DataFrame, so a 75-query
-    * bench/verify session pinned a new MEMORY_AND_DISK copy per
-    * invocation and the block manager accumulated dead entries for the
-    * whole run (the measured cause of the round-2 bench regression —
-    * every query alphabetically after corpus_curation slowed 2-20×).
-    * Memoizing means the six dedup-family queries share ONE cached
-    * signature table and ONE edge set — the in-session analog of
-    * writing the signature table out once at cluster scale — and
-    * [[release]] gives the session an explicit end-of-pipeline hook.
+  /** Unpersist and forget every stored artifact of `spark` — the
+    * end-of-pipeline hook every driver calls before session stop. See
+    * [[Artifacts.release]].
     */
-  // Lifecycle note: a weak-keyed map would NOT work here — the
-  // persisted DataFrame value strongly references its SparkSession
-  // (via queryExecution), so the key never becomes weakly reachable
-  // (the WeakHashMap value→key pitfall). Instead: strong entries keyed
-  // by session UUID, an explicit [[release]] hook (Verify/Bench call it
-  // before stop), and a sweep on every access that drops entries whose
-  // SparkContext has stopped — a stopped context's blocks are already
-  // gone, so the sweep only frees driver-side references. A live
-  // session that never calls release keeps its two small cached tables:
-  // that is the memoization working, not a leak.
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), (SparkSession, DataFrame)]
-
-  /** Stable per-session key: sessions are compared by object identity
-    * (Spark 4.1.2's SparkSession exposes no session UUID), so the
-    * identity hash code is the natural memo key component.
-    */
-  private def sessionKey(spark: SparkSession): String =
-    System.identityHashCode(spark).toString
-
-  private def sweepStopped(): Unit =
-    memo.filterInPlace { case (_, (s, _)) => !s.sparkContext.isStopped }
-
-  /** Per-key build locks: Bench's warmup drives entries from a small
-    * thread pool (guide §2.6 — overlap independent jobs so one entry's
-    * straggler tail backfills with the next entry's tasks), and a bare
-    * TrieMap.getOrElseUpdate under that concurrency can evaluate
-    * `build` twice for one key — the loser's persisted (sometimes
-    * eagerly checkpointed) frame would leak unpersisted for the
-    * session. One lock per key serializes only same-key builders;
-    * different artifacts still build concurrently. Lock objects are
-    * tiny and never removed (bounded by the artifact-key space).
-    */
-  private val memoLocks = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), Object]
-
-  private[graft] def memoized(spark: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    sweepStopped()
-    val k = (sessionKey(spark), dir, key)
-    memo.get(k) match {
-      case Some((_, df)) => df
-      case None =>
-        val lock = memoLocks.getOrElseUpdate(k, new Object)
-        lock.synchronized {
-          memo.getOrElseUpdate(k,
-            (spark, build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))._2
-        }
-    }
-  }
-
-  /** Unpersist and forget every memoized artifact of `spark` — the
-    * end-of-pipeline hook Verify/Bench call before session stop — and
-    * its resolved sources ([[SourceCache]]), so the next build resolves
-    * again.
-    *
-    * Sibling-session subtlety: the CacheManager lives in SharedState,
-    * so two sessions of one SparkContext that memoize the same
-    * (dir, key) share ONE cache entry (same canonicalized plan).
-    * Unpersisting unconditionally would silently unpin the artifact a
-    * SIBLING's memo still advertises as cached (measured: the sibling's
-    * storageLevel drops to NONE). Blocks are released only when no
-    * other session's entry still references the same (dir, key).
-    */
-  def release(spark: SparkSession): Unit = {
-    val mine = sessionKey(spark)
-    memo.keys.filter(_._1 == mine).foreach { k =>
-      memo.remove(k).foreach { case (_, df) =>
-        val sharedWithLiveSibling = memo.keys.exists(o =>
-          o._1 != mine && o._2 == k._2 && o._3 == k._3)
-        if (!sharedWithLiveSibling) df.unpersist(blocking = false)
-      }
-    }
-    bm25StatsCache.filterInPlace { case ((s, _), _) => s != mine }
-    SourceCache.release(spark)
-  }
-
-  /** Persistent-RDD ids this session's memoized artifacts DEPEND on:
-    * the localCheckpoint RDDs their plans scan (LogicalRDD leaves —
-    * the "plan-size cut under the memo persist" device). A checkpoint
-    * block is the ONLY copy of its partition, so the bench/verify
-    * inter-query block sweep ([[Bench]]) must never unpersist one of
-    * these: a memo cache partition that later recomputes (eviction,
-    * multi-session sharing) would fail with a missing-block error
-    * instead of rebuilding. Everything ELSE locally checkpointed is
-    * per-query transient by construction in this library (iterative
-    * cutLineage rounds, duplicate-subtree cuts) and safe to drop once
-    * the query's action has returned.
-    */
-  private[graft] def memoPinnedRddIds(spark: SparkSession): Set[Int] = {
-    val mine = sessionKey(spark)
-    memo.readOnlySnapshot().collect { case ((s, _, _), (_, df)) if s == mine => df }
-      .flatMap { df =>
-        df.queryExecution.analyzed.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-        }
-      }.toSet
-  }
-
-  /** Test-only visibility into the memo lifecycle (TextOpsSpec's
-    * multi-session stress test): entry count for a given session and
-    * overall, after a sweep.
-    */
-  private[graft] def memoEntriesFor(spark: SparkSession): Int = {
-    sweepStopped()
-    memo.keys.count(_._1 == sessionKey(spark))
-  }
-
-  /** The artifact KEYS this session has memoized — WarmupSpec asserts
-    * the bench warmup list touches every one of them (registration
-    * happens at plan-construction time inside [[memoized]], so the
-    * test can enumerate artifacts without executing the registry).
-    */
-  private[graft] def memoKeysFor(spark: SparkSession): Set[String] = {
-    sweepStopped()
-    val mine = sessionKey(spark)
-    memo.keys.collect { case (s, _, k) if s == mine => k }.toSet
-  }
-  private[graft] def memoEntriesTotal: Int = { sweepStopped(); memo.size }
+  def release(spark: SparkSession): Unit = Artifacts.release(spark)
 
   /** Whitespace tokenization shared by all text operators — and by the
     * streaming twins (StreamingVocab): one definition, so a tokenizer
@@ -1266,21 +1139,9 @@ object TextOps {
     * iterative algorithm on Spark; superseded rounds' blocks are
     * reclaimed by the ContextCleaner once unreferenced.
     *
-    * Checkpoint mode: `localCheckpoint` blocks live UNREPLICATED on
-    * executors, so on a real cluster any executor loss (or dynamic-
-    * allocation decommission) makes a checkpointed round
-    * unrecoverable and fails the job. The cut therefore upgrades to
-    * reliable `Dataset.checkpoint` automatically whenever the caller
-    * has set `sc.setCheckpointDir` (the cluster deployment signal);
-    * local/test runs without a checkpoint dir keep the cheaper
-    * executor-local variant. Shared with [[GraphOps]] — every
-    * iterative loop in the library cuts lineage through this one seam
-    * so the reliable-mode upgrade applies uniformly.
+    * The cut goes through [[Artifacts.cutLineage]], which upgrades to
+    * a reliable checkpoint when a checkpoint dir is set.
     */
-  private[graft] def cutLineage(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
   def propagateToFixpoint(edges: DataFrame): DataFrame = {
     var labels = cutLineage(
       edges.select(col("doc_a").as("node")).distinct()
@@ -1831,27 +1692,23 @@ object TextOps {
     }
 
   /** Index-level BM25 statistics (document count, total token count)
-    * collected ONCE per (session, dir) from the memoized
-    * [[docLenIndex]] — the [[graft.operators.VectorOps]] dialCache
-    * device: a deployment stores these two numbers in the index stats
-    * block, it does not re-aggregate doc lengths per query. The one
-    * collect job per session reads the already-cached sidecar (never
-    * an extra corpus scan), and the values embed as literals so each
-    * tower drops both the 1-row stats aggregate and its broadcast
-    * round-trip. count/sum skip null-dl docs exactly like the frame
-    * aggregate they replace.
+    * collected ONCE per corpus generation from the memoized
+    * [[docLenIndex]] ([[Artifacts.scalar]]): a deployment stores these
+    * two numbers in the index stats block, it does not re-aggregate doc
+    * lengths per query. The one collect job reads the already-cached
+    * sidecar (never an extra corpus scan), and the values embed as
+    * literals so each tower drops both the 1-row stats aggregate and
+    * its broadcast round-trip. count/sum skip null-dl docs exactly
+    * like the frame aggregate they replace.
     */
-  private val bm25StatsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Long, Long)]
-
   private[graft] def bm25Stats(spark: SparkSession, dir: String): (Long, Long) =
-    bm25StatsCache.getOrElseUpdate((sessionKey(spark), dir), {
+    Artifacts.scalar(spark, dir, "bm25_stats") {
       val r = docLenIndex(spark, dir)
         .agg(count(col("dl")).as("n_docs"), sum(col("dl")).as("dl_sum"))
         .head()
       // sum() is NULL on an empty corpus (count 0) — read it null-safe
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    })
+    }
 
   def tfidf(spark: SparkSession, dir: String): DataFrame =
     tfidfTopTerms(spark, dir)
@@ -3890,7 +3747,7 @@ object TextOps {
     * split). Ranking key (bigram count DESC, total edit distance ASC,
     * candidates ASC) is all-integer. Plan shape (the r13 fix, then
     * tightened): the candidate-pair frame is MATERIALIZED once
-    * (localCheckpoint — it is |inputs|·|cands|² tiny, and it feeds two
+    * (cutLineage — it is |inputs|·|cands|² tiny, and it feeds two
     * consumers), its keys broadcast-semi-cut the exploded bigram
     * STREAM before the aggregation shuffle — so only candidate-pair
     * bigrams ever shuffle, not the vocabulary²-bounded corpus bigram
@@ -3917,12 +3774,11 @@ object TextOps {
     val spark = cands.sparkSession
     import spark.implicits._
     val ph = workload.toDF("query_id", "in_a", "in_b")
-    val pairs = ph
+    val pairs = cutLineage(ph // tiny; feeds the key cut AND the final join
       .join(cands.select(col("input_term").as("in_a"),
         col("term").as("cand_a"), col("dist").as("dist_a")), Seq("in_a"))
       .join(cands.select(col("input_term").as("in_b"),
-        col("term").as("cand_b"), col("dist").as("dist_b")), Seq("in_b"))
-      .localCheckpoint() // tiny; feeds the key cut AND the final join
+        col("term").as("cand_b"), col("dist").as("dist_b")), Seq("in_b")))
     val keys = pairs.select(col("cand_a"), col("cand_b")).distinct()
     val bgCut = words
       .where(size(col("words")) >= 2)

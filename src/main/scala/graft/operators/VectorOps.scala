@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
+import graft.sources.Artifacts.{cutLineage, memoized}
 
 /** Embedding similarity search over the `embeddings` table
   * (vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
@@ -213,7 +214,7 @@ object VectorOps {
     * caching cannot change any consumer's output.
     */
   def knnExact(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "knn_exact") {
+    memoized(spark, dir, "knn_exact") {
       val base = withNorm(spark, dir)
       val q = base.where(col("vec_id") % QueryMod === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -565,7 +566,7 @@ object VectorOps {
     */
   def dedupEmbeddingClusters(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits): DataFrame = {
-    val edges = TextOps.memoized(spark, dir, "emb_lsh_edges") {
+    val edges = memoized(spark, dir, "emb_lsh_edges") {
       val pairs = dedupEmbedding(spark, dir, numPlanes, bandBits)
         .select(col("vec_a"), col("vec_b"))
       pairs.unionAll(
@@ -574,7 +575,7 @@ object VectorOps {
     // the propagated labels are a shared artifact too (mirrors the
     // text family's cc_labels): memoizing caps the unrolled rounds'
     // lineage at one computation per session
-    val labels = TextOps.memoized(spark, dir, "emb_cc_labels") {
+    val labels = memoized(spark, dir, "emb_cc_labels") {
       val nodes = edges.select(col("vec_a").as("node")).distinct()
       var l = nodes.withColumn("label", col("node"))
       for (_ <- 1 to TextOps.CcRounds) {
@@ -649,7 +650,7 @@ object VectorOps {
       .select(col("vec_id").as("query_id"),
         col("c_label").as("assigned_label"), col("rn").as("probe_rn"))
     val base = withNorm(spark, dir)
-    val sims = probes.join(assignments, Seq("assigned_label"))
+    val sims = cutLineage(probes.join(assignments, Seq("assigned_label"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("probe_rn"))
       .join(base.select(col("vec_id").as("neighbor_id"), col("embedding"),
@@ -659,8 +660,7 @@ object VectorOps {
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
             col("nrm").as("qnrm"))),
         Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("probe_rn"), cosine)
-      .localCheckpoint()
+      .select(col("query_id"), col("neighbor_id"), col("probe_rn"), cosine))
     val exact = knnExact(spark, dir).select(col("query_id"), col("neighbor_id"))
     RecallCurveProbes.map { np =>
       val approx = topK(sims.where(col("probe_rn") <= np)
@@ -803,7 +803,7 @@ object VectorOps {
     * once by an offline training job).
     */
   def centroidsRaw(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"ivf_means_$nlist") {
+    memoized(spark, dir, s"ivf_means_$nlist") {
       trainMeans(Tables.embeddings(spark, dir), nlist)
     }
 
@@ -837,7 +837,7 @@ object VectorOps {
     // lineage cut: the training chain (2 rounds of windows over
     // crossJoins) otherwise re-enters Catalyst in EVERY consumer's
     // logical plan — measured seconds of pure planning per IVF query
-    means.localCheckpoint()
+    cutLineage(means)
   }
 
   /** Broadcastable (c_label, centroid, cnrm) codebook from a
@@ -869,7 +869,7 @@ object VectorOps {
     // memoized: the trained codebook is the IVF family's shared
     // artifact (assign, search, recall all broadcast it) — ≤nlist rows,
     // the in-session analog of writing the codebook out once at scale
-    TextOps.memoized(spark, dir, s"ivf_centroids_$nlist") {
+    memoized(spark, dir, s"ivf_centroids_$nlist") {
       vectorsFromMeans(centroidsRaw(spark, dir, nlist))
     }
 
@@ -899,12 +899,11 @@ object VectorOps {
   }
 
   /** The corpus count behind the dials — one planning-scale action
-    * (parquet footer row counts), memoized per session like the
-    * Layout file index.
+    * (parquet footer row counts), stored once per corpus generation
+    * ([[Artifacts.scalar]]).
     */
-  private val dialCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
   private def corpusCount(spark: SparkSession, dir: String): Long =
-    dialCache.computeIfAbsent(dir, _ => Tables.embeddings(spark, dir).count())
+    Artifacts.scalar(spark, dir, "corpus_count") { Tables.embeddings(spark, dir).count() }
 
   /** The chosen dials as a 1-row gauge (n_vectors, nlist, sample_mod,
     * nprobe) — the observable contract of the auto-sizing rule, so a
@@ -949,7 +948,7 @@ object VectorOps {
     */
   private[graft] def centroidVectorsAuto(spark: SparkSession, dir: String): DataFrame = {
     val n = corpusCount(spark, dir)
-    TextOps.memoized(spark, dir, "ivf_auto_centroids") {
+    memoized(spark, dir, "ivf_auto_centroids") {
       centroidVectorsAutoFrom(Tables.embeddings(spark, dir), n)
     }
   }
@@ -959,12 +958,11 @@ object VectorOps {
     * offline indexing job every ANN store runs).
     */
   def ivfAssignAuto(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "ivf_auto_assign") {
-      nearestCentroids(withNorm(spark, dir),
+    memoized(spark, dir, "ivf_auto_assign") {
+      cutLineage(nearestCentroids(withNorm(spark, dir), // plan-size cut, same device as ivfAssign
         centroidVectorsAuto(spark, dir), nearest = 1)
         .select(col("vec_id"), col("label"),
-          col("c_label").as("assigned_label"), col("sim"))
-        .localCheckpoint() // plan-size cut, same device as ivfAssign
+          col("c_label").as("assigned_label"), col("sim")))
     }
 
   /** [[knnIvf]] on the AUTO-SIZED index: each probe scans ~√N
@@ -1107,12 +1105,12 @@ object VectorOps {
     * would otherwise each re-run the corpus-wide argmax.
     */
   def ivfAssign(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"ivf_assign_$nlist") {
-      nearestCentroids(withNorm(spark, dir), centroidVectors(spark, dir, nlist),
+    memoized(spark, dir, s"ivf_assign_$nlist") {
+      // plan-size cut, same device as centroidsRaw
+      cutLineage(nearestCentroids(withNorm(spark, dir), centroidVectors(spark, dir, nlist),
         nearest = 1)
         .select(col("vec_id"), col("label"),
-          col("c_label").as("assigned_label"), col("sim"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+          col("c_label").as("assigned_label"), col("sim")))
     }
 
   /** Recall@K of the sign-LSH ANN against the exact baseline — the
@@ -1150,7 +1148,7 @@ object VectorOps {
     * persisting it next to the index at scale.
     */
   private def sq8Stats(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "sq8_stats") {
+    memoized(spark, dir, "sq8_stats") {
       Tables.embeddings(spark, dir)
         .select(posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("pos"))
@@ -1192,7 +1190,7 @@ object VectorOps {
     * here because the in-session memo stands in for that scan.
     */
   private def sq8Codes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "sq8_codes") {
+    memoized(spark, dir, "sq8_codes") {
       withNorm(spark, dir)
         .crossJoin(broadcast(sq8Stats(spark, dir)))
         .withColumn("code", expr(sq8CodeExpr("embedding")))
@@ -1263,7 +1261,7 @@ object VectorOps {
     * scale the 8-byte code is written next to the vector at ingest.
     */
   private def bqCodes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "bq_codes") {
+    memoized(spark, dir, "bq_codes") {
       graft.plans.GraftExtensions.register(spark)
       withNorm(spark, dir)
         .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -1534,7 +1532,7 @@ object VectorOps {
     * the codebook artifact once.
     */
   private[graft] def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "pq_codebook") {
+    memoized(spark, dir, "pq_codebook") {
       val sums = pqSubs(spark, dir)
         .select(col("m"), col("cell"), posexplode(col("sub")).as(Seq("pos", "val")))
         .groupBy(col("m"), col("cell"), col("pos"))
@@ -1545,13 +1543,12 @@ object VectorOps {
           count(lit(1)).as("n"))
         .withColumn("mean", col("csum").cast("double") / expr(Scale) / col("n"))
       val w = Window.orderBy(col("m"), col("cell"))
-      sums.groupBy(col("m"), col("cell"))
+      cutLineage(sums.groupBy(col("m"), col("cell")) // plan-size cut, same device as centroidsRaw
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), t -> t.mean)")
           .as("centroid"))
         .select(col("m"), col("cell"), col("centroid"),
           expr(dot("centroid", "centroid")).as("cnrm"))
-        .withColumn("slot", (row_number().over(w) - 1).cast("long"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+        .withColumn("slot", (row_number().over(w) - 1).cast("long")))
     }
 
   /** PQ-coded corpus: per vector the 8 slot codes (in subspace order),
@@ -1569,12 +1566,12 @@ object VectorOps {
     * stand in for that storage layout in-session.
     */
   private[graft] def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "pq_codes") {
+    memoized(spark, dir, "pq_codes") {
       val l2 =
         """aggregate(zip_with(sub, centroid, (x, y) ->
           |  (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
           |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
-      pqSubs(spark, dir)
+      cutLineage(pqSubs(spark, dir) // plan-size cut, same device as centroidsRaw
         .drop("cell") // the training cell is irrelevant at encode time
         .join(broadcast(pqCodebook(spark, dir)), Seq("m"))
         .select(col("vec_id"), col("m"),
@@ -1589,8 +1586,7 @@ object VectorOps {
           expr("""aggregate(transform(array_sort(collect_list(struct(m, best.cnrm))),
             t -> t.cnrm), CAST(0 AS DOUBLE), (acc, v) -> acc + v)""").as("rnrm"),
           expr("""flatten(transform(array_sort(collect_list(struct(m, best.centroid))),
-            t -> t.centroid))""").as("vhat"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+            t -> t.centroid))""").as("vhat")))
     }
 
   /** ANN via product quantization: the approximate pass scores each
@@ -1672,8 +1668,8 @@ object VectorOps {
     * both scan it.
     */
   private def ivfResiduals(spark: SparkSession, dir: String, nlist: Int): DataFrame =
-    TextOps.memoized(spark, dir, s"ivfpq_residuals_$nlist") {
-      ivfAssign(spark, dir, nlist)
+    memoized(spark, dir, s"ivfpq_residuals_$nlist") {
+      cutLineage(ivfAssign(spark, dir, nlist) // plan-size cut, same device as centroidsRaw
         .select(col("vec_id"), col("assigned_label"))
         .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
           Seq("vec_id"))
@@ -1682,8 +1678,7 @@ object VectorOps {
           Seq("assigned_label"))
         .select(col("vec_id"), col("assigned_label"),
           expr("zip_with(embedding, centroid, (x, y) -> CAST(x AS DOUBLE) - y)")
-            .as("res"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+            .as("res")))
     }
 
   /** One row per (vector, subspace) of the residual: training cell from
@@ -1709,7 +1704,7 @@ object VectorOps {
     * residual space.
     */
   private[graft] def pqrCodebook(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"pqr_codebook_$nlist") {
+    memoized(spark, dir, s"pqr_codebook_$nlist") {
       val sums = pqrSubs(spark, dir, nlist)
         .select(col("m"), col("cell"), posexplode(col("sub")).as(Seq("pos", "val")))
         .groupBy(col("m"), col("cell"), col("pos"))
@@ -1719,12 +1714,11 @@ object VectorOps {
           count(lit(1)).as("n"))
         .withColumn("mean", col("csum").cast("double") / expr(ResGrid) / col("n"))
       val w = Window.orderBy(col("m"), col("cell"))
-      sums.groupBy(col("m"), col("cell"))
+      cutLineage(sums.groupBy(col("m"), col("cell")) // plan-size cut, same device as centroidsRaw
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), t -> t.mean)")
           .as("centroid"))
         .select(col("m"), col("cell"), col("centroid"))
-        .withColumn("slot", (row_number().over(w) - 1).cast("long"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+        .withColumn("slot", (row_number().over(w) - 1).cast("long")))
     }
 
   /** Residual-coded corpus: per vector the 8 slot codes, plus the full
@@ -1733,12 +1727,12 @@ object VectorOps {
     * rnrm) are stored; v̂ is encode-time scratch.
     */
   private[graft] def pqrCodes(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"pqr_codes_$nlist") {
+    memoized(spark, dir, s"pqr_codes_$nlist") {
       val l2 =
         """aggregate(zip_with(sub, centroid, (x, y) ->
           |  (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
           |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
-      pqrSubs(spark, dir, nlist)
+      cutLineage(pqrSubs(spark, dir, nlist) // plan-size cut, same device as centroidsRaw
         .drop("cell")
         .join(broadcast(pqrCodebook(spark, dir, nlist)), Seq("m"))
         .select(col("vec_id"), col("assigned_label"), col("m"),
@@ -1757,8 +1751,7 @@ object VectorOps {
         .withColumn("vhat", expr("zip_with(ccent, recon, (x, y) -> x + y)"))
         .withColumn("rnrm", expr(dot("vhat", "vhat")))
         .select(col("vec_id"), col("assigned_label"), col("codes"),
-          col("vhat"), col("rnrm"))
-        .localCheckpoint() // plan-size cut, same device as centroidsRaw
+          col("vhat"), col("rnrm")))
     }
 
   /** Per-query slot LUT over the RESIDUAL codebook (mirror of
@@ -2152,7 +2145,7 @@ object VectorOps {
         if (t < KcK) {
           val pv = broadcast(base.where(col("vec_id") === top.getLong(0))
             .select(col("embedding").as("pv"), col("nrm").as("pnrm")))
-          d = TextOps.cutLineage(d.crossJoin(pv).select(
+          d = cutLineage(d.crossJoin(pv).select(
             col("vec_id"), col("embedding"), col("nrm"),
             least(col("d"),
               lit(1.0) - expr(dot("embedding", "pv")) /
@@ -2189,7 +2182,7 @@ object VectorOps {
     */
   def knnGraph(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits): DataFrame =
-    TextOps.memoized(spark, dir, "knn_graph") {
+    memoized(spark, dir, "knn_graph") {
       graft.plans.GraftExtensions.register(spark)
       val bands = Tables.embeddings(spark, dir).select(
         col("vec_id"),
@@ -2316,7 +2309,7 @@ object VectorOps {
   def knnGraphBeam(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits,
       rounds: Int = BeamRounds): DataFrame =
-    TextOps.memoized(spark, dir, s"knn_graph_beam_$rounds") {
+    memoized(spark, dir, s"knn_graph_beam_$rounds") {
       graft.plans.GraftExtensions.register(spark)
       val base = withNorm(spark, dir)
       val queries = broadcast(base.where(col("vec_id") % QueryMod === 0)
@@ -2345,7 +2338,7 @@ object VectorOps {
           .select(col("query_id"), col("next_id").as("neighbor_id")))
         .where(col("neighbor_id") =!= col("query_id"))
         .distinct()
-      var fresh = TextOps.cutLineage(score(hop1))
+      var fresh = cutLineage(score(hop1))
       var visited = fresh
       for (_ <- 2 to rounds) {
         val beam = fresh.groupBy(col("query_id"))
@@ -2358,8 +2351,8 @@ object VectorOps {
           .distinct()
           .join(visited.select(col("query_id"), col("neighbor_id")),
             Seq("query_id", "neighbor_id"), "left_anti")
-        fresh = TextOps.cutLineage(score(next))
-        visited = TextOps.cutLineage(visited.unionAll(fresh))
+        fresh = cutLineage(score(next))
+        visited = cutLineage(visited.unionAll(fresh))
       }
       topK(visited)
     }

@@ -171,7 +171,7 @@ object EsShapedSink {
     if (EsShaped.liveGenerations(path, conf)._1.size > 1) {
       // materialize BEFORE the overwrite plans: the collapse reads the
       // very generations the publish replaces (read-your-own-table)
-      publish(read(spark, path).localCheckpoint(), path)
+      publish(Artifacts.cutLineage(read(spark, path)), path)
       vacuum(path, conf)
     }
   }

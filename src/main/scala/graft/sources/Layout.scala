@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Artifacts.memoized
+
 /** Storage-layout operators: the WRITE-time levers that remove
   * query-time cost at 100 TB.
   *
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
   *     100 TB a trailing-window query prices as the window's bytes,
   *     not the table's.
   *
-  * Writes are per-JVM memoized (same build-once-per-session policy as
-  * TextOps.memoized artifacts) and land under java.io.tmpdir keyed by
+  * Writes are per-JVM memoized (the build-once policy of
+  * [[Artifacts.memoized]] artifacts) and land under java.io.tmpdir keyed by
   * the source dir, so every scale factor gets its own layout copy.
   */
 object Layout {
@@ -245,7 +247,7 @@ object Layout {
   private[graft] def bloomFileIndex(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.register(spark)
     val (path, schema) = bloomClusteredEvents(spark, dir)
-    graft.operators.TextOps.memoized(spark, dir, "bloom_file_index") {
+    memoized(spark, dir, "bloom_file_index") {
       val src = spark.read.schema(schema).parquet(path)
       // size each file's filter from the ACTUAL per-file row estimate
       // (total rows / files, +25% range-partition skew headroom) at a

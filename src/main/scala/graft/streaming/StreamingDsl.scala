@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.DslQueries
 import graft.plans.QueryDsl.Env
+import graft.sources.Artifacts.cutLineage
 
 /** Incremental SEARCH SERVING through the Query-DSL compiler: document
   * batches accumulate in a raw-row store, and [[servedEnv]] exposes
@@ -119,8 +120,7 @@ object StreamingDsl {
     // compile (StreamingDslSpec pins it); the refresh cadence at
     // scale is StreamingVectors' codebook-version protocol
     val n = vecs.count()
-    val codebook = graft.operators.VectorOps
-      .centroidVectorsAutoFrom(vecs, n).localCheckpoint()
+    val codebook = cutLineage(graft.operators.VectorOps.centroidVectorsAutoFrom(vecs, n))
     val assignments = StreamingVectors.assignBatch(vecs, codebook)
       .select(col("vec_id"), col("assigned_label"))
     Env(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.VectorOps
+import graft.sources.Artifacts.cutLineage
 
 /** Incremental vector-index maintenance under streaming ingest — the
   * embedding-side analog of [[StreamingCorpus]]: new vectors arrive as
@@ -166,8 +167,7 @@ object StreamingVectors {
       .parquet(s"$storePath/vectors/ingest_batch=$batchId")
     if ((batchId + 1) % refreshEvery == 0) {
       val all = readVectors(spark, storePath)
-      val codebook = VectorOps.codebookFromMeans(VectorOps.trainMeans(all, nlist))
-        .localCheckpoint()
+      val codebook = cutLineage(VectorOps.codebookFromMeans(VectorOps.trainMeans(all, nlist)))
       codebook.write.mode("overwrite")
         .parquet(s"$storePath/codebook/version=$batchId")
       assignCols(assignBatch(all, codebook))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, TextOps, VectorOps}
 
 /** Graph analytics semantics on the sf0.001 fixture. */
 class GraphOpsSpec extends SparkSpec {
@@ -166,14 +166,30 @@ class GraphOpsSpec extends SparkSpec {
       df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     val plainBatch = cset(GraphOps.closureOf(chain.unionAll(shortcut)))
     val plainIncr = cset(GraphOps.incrementalClosure(GraphOps.closureOf(chain), shortcut))
+    // the same seam cuts a memoized artifact's plan (the auto-sized IVF
+    // lists) and an in-query duplicate subtree (linkPredict's edges);
+    // each run gets its own session so the memo builds again
+    def ann() = {
+      val s = spark.newSession()
+      try VectorOps.ivfAssignAuto(s, sfDir).collect().toSet
+      finally TextOps.release(s)
+    }
+    def links() = GraphOps.linkPredict(spark, sfDir).collect().toSet
+    val (plainAnn, plainLinks) = (ann(), links())
+    def landed() = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
     spark.sparkContext.setCheckpointDir(ckpt)
     try {
       assert(cset(GraphOps.closureOf(chain.unionAll(shortcut))) === plainBatch)
       assert(cset(GraphOps.incrementalClosure(GraphOps.closureOf(chain), shortcut))
         === plainIncr)
-      val landed = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(landed > 0, "no reliable checkpoint files written by the graph loops")
+      val afterGraph = landed()
+      assert(afterGraph > 0, "no reliable checkpoint files written by the graph loops")
+      assert(ann() === plainAnn)
+      val afterAnn = landed()
+      assert(afterAnn > afterGraph, "no reliable checkpoint files written by ivfAssignAuto")
+      assert(links() === plainLinks)
+      assert(landed() > afterAnn, "no reliable checkpoint files written by linkPredict")
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 

@@ -62,6 +62,39 @@ trait SparkSpec extends AnyFunSuite
     dir
   }
 
+  /** Spark jobs `f` starts, threads it creates included (they inherit
+    * the probe's local property). The listener bus is asynchronous, so
+    * a trailing marker job flushes it: its start arrives after every
+    * earlier job's.
+    */
+  def jobsOf(f: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val token = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.probe")).foreach { p =>
+          if (p == token) jobs.incrementAndGet()
+          else if (p == s"$token/end") flushed.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", token)
+      f
+      sc.setLocalProperty("graft.probe", s"$token/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      jobs.get
+    } finally {
+      sc.setLocalProperty("graft.probe", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   def checkScalaCheck(prop: org.scalacheck.Prop, minTests: Int = 20): Unit = {
     val params = org.scalacheck.Test.Parameters.default
       .withMinSuccessfulTests(minTests)

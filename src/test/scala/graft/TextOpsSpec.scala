@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
+import graft.sources.Artifacts
 
 /** Unit tests for the text-analysis / dedup operators, on injected
   * documents fixtures (tempTableDir) so edge semantics are controlled.
@@ -445,30 +446,30 @@ class TextOpsSpec extends SparkSpec {
     // Bench exercise that path end-to-end every round.
     val s1 = spark.newSession()
     val s2 = spark.newSession()
-    val before = TextOps.memoEntriesTotal
+    val before = Artifacts.memoEntriesTotal
     val sig1 = TextOps.minhashSignatures(s1, dir)
     val sig2 = TextOps.minhashSignatures(s2, dir)
     sig1.count(); sig2.count()
     // memoization: the same (session, dir) returns the SAME cached frame
     assert(TextOps.minhashSignatures(s1, dir) eq sig1)
     // isolation: one entry per session, keyed apart
-    assert(TextOps.memoEntriesFor(s1) === 1)
-    assert(TextOps.memoEntriesFor(s2) === 1)
-    assert(TextOps.memoEntriesTotal === before + 2)
+    assert(Artifacts.memoEntriesFor(s1) === 1)
+    assert(Artifacts.memoEntriesFor(s2) === 1)
+    assert(Artifacts.memoEntriesTotal === before + 2)
     assert(sig1.storageLevel.useMemory)
     // the shared CacheManager gives both sessions ONE cache entry for
     // the identical plan: releasing s1 must drop s1's memo entry but
     // keep the blocks pinned while s2's entry still references them
     TextOps.release(s1)
-    assert(TextOps.memoEntriesFor(s1) === 0)
-    assert(TextOps.memoEntriesFor(s2) === 1)
+    assert(Artifacts.memoEntriesFor(s1) === 0)
+    assert(Artifacts.memoEntriesFor(s2) === 1)
     assert(sig2.storageLevel.useMemory,
       "sibling release must not unpin a still-referenced shared artifact")
     // last reference released → blocks unpinned, registry back to start
     TextOps.release(s2)
-    assert(TextOps.memoEntriesFor(s2) === 0)
+    assert(Artifacts.memoEntriesFor(s2) === 0)
     assert(sig2.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    assert(TextOps.memoEntriesTotal === before)
+    assert(Artifacts.memoEntriesTotal === before)
   }
 
   test("propagateToFixpoint upgrades to reliable checkpoints when a checkpoint dir is set") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextOps
+import graft.sources.Artifacts
 
 /** Staleness guard for the bench warmup list (SparkEntry.warmups).
   *
@@ -12,7 +13,7 @@ import graft.operators.TextOps
   * query builds must be touched by some warmup entry.
   *
   * Registration happens at plan-CONSTRUCTION time inside
-  * TextOps.memoized (getOrElseUpdate runs while the DataFrame is being
+  * Artifacts.memoized (the slot builds while the DataFrame is being
   * assembled), so enumerating artifacts only needs each query's
   * builder invoked, not its job executed — the whole registry
   * constructs in seconds at sf0.001.
@@ -29,10 +30,10 @@ class WarmupSpec extends SparkSpec {
     // clean slate for THIS session so key sets are attributable
     TextOps.release(spark)
     SparkEntry.warmups.foreach(n => SparkEntry.queries(n)(spark, sfDir))
-    val afterWarmups = TextOps.memoKeysFor(spark)
+    val afterWarmups = Artifacts.memoKeysFor(spark)
     assert(afterWarmups.nonEmpty, "warmups registered no memoized artifacts at all")
     SparkEntry.queries.keys.toSeq.sorted.foreach(n => SparkEntry.queries(n)(spark, sfDir))
-    val all = TextOps.memoKeysFor(spark)
+    val all = Artifacts.memoKeysFor(spark)
     val uncovered = all -- afterWarmups
     assert(uncovered.isEmpty,
       s"memoized artifacts no warmup touches (add their family's query to SparkEntry.warmups): $uncovered")
