@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{Artifacts, Tables}
 import graft.sources.Artifacts.{cutLineage, memoized}
-import graft.sources.Tables
 
 /** Graph analytics over relationally-derived edge lists.
   *
@@ -18,11 +18,12 @@ import graft.sources.Tables
   *
   * Scale shape: an edge list is just a DataFrame keyed by (src, dst);
   * every iteration is one keyed join + one partial-aggregated groupBy —
-  * the same two-shuffle round as [[TextOps.propagateToFixpoint]], and
-  * like there the iteration count is fixed and small, so lineage stays
-  * bounded without checkpoints.
+  * the same two-shuffle round as [[TextOps.propagateBounded]].
   *
-  * Checkpoint discipline: every lineage cut in this module goes
+  * Checkpoint discipline: every loop here cuts lineage each round. A
+  * loop whose state is one frame (pagerank, k-core, star contraction,
+  * HITS) runs through [[graft.sources.Artifacts.iterate]]; the closure
+  * loops carry several frames and cut each themselves. Every cut goes
   * through [[graft.sources.Artifacts.cutLineage]] — executor-local checkpoints when no
   * checkpoint dir is set (local/test), upgrading to reliable
   * `checkpoint(true)` when `sc.setCheckpointDir` is configured (the
@@ -38,11 +39,6 @@ import graft.sources.Tables
   * engines and under any shuffle.
   */
 object GraphOps {
-
-  /** Lineage cut for the iterative loops below — the shared seam (see
-    * the object Scaladoc for the reliable-mode upgrade).
-    */
-  private def cut(df: DataFrame): DataFrame = cutLineage(df)
 
   /** Row cap for [[incrementalClosure]]'s broadcast hints. The normal
     * arrival path keeps every hinted frame delta-sized (thousands of
@@ -252,12 +248,14 @@ object GraphOps {
     * delta are checkpointed ([[graft.sources.Artifacts.cutLineage]] — reliable when a
     * checkpoint dir is set): rounds scan a materialized table
     * instead of re-planning the whole assets_all lineage, and the loop
-    * stays O(1) planning per round (the propagateToFixpoint device).
+    * stays O(1) planning per round. The loop carries two frames (the
+    * reached set and the frontier), so it cuts each itself rather than
+    * through [[graft.sources.Artifacts.iterate]].
     * A `WITH RECURSIVE` mirror remains the DuckDB oracle — the driver's
     * differential check proves the two formulations agree.
     */
   def assetClosure(spark: SparkSession, dir: String): DataFrame =
-    closureOf(cut(upwardEdges(spark, dir))) // rounds join a materialized edge table, not the assets_all plan
+    closureOf(cutLineage(upwardEdges(spark, dir))) // rounds join a materialized edge table, not the assets_all plan
 
   /** The frontier-dedup BFS itself, over any (src, dst) edge frame —
     * [[assetClosure]] binds it to the asset graph; the incremental
@@ -265,19 +263,19 @@ object GraphOps {
     * reference.
     */
   private[graft] def closureOf(up: DataFrame): DataFrame = {
-    var reached = cut(up.select(col("src"), col("dst"))
+    var reached = cutLineage(up.select(col("src"), col("dst"))
       .withColumn("depth", lit(1L)))
     var frontier = reached
     var depth = 1L
     while (depth < ClosureMaxDepth && !frontier.isEmpty) {
       depth += 1
-      val fresh = cut(frontier.alias("a")
+      val fresh = cutLineage(frontier.alias("a")
         .join(up.alias("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
         .distinct()
         .join(reached, Seq("src", "dst"), "left_anti")
         .withColumn("depth", lit(depth)))
-      reached = cut(reached.unionAll(fresh))
+      reached = cutLineage(reached.unionAll(fresh))
       frontier = fresh
     }
     reached.select(col("src").as("asset_ean"), col("dst").as("reached_ean"),
@@ -334,8 +332,8 @@ object GraphOps {
     * round-6 shape cost 2× the rebuild.
     */
   def incrementalClosure(prevClosure: DataFrame, newEdges: DataFrame): DataFrame = {
-    val fresh = cut(newEdges.select(col("src"), col("dst")).distinct())
-    val base = cut(prevClosure
+    val fresh = cutLineage(newEdges.select(col("src"), col("dst")).distinct())
+    val base = cutLineage(prevClosure
       .select(col("asset_ean").as("src"), col("reached_ean").as("dst"), col("depth")))
     // Broadcast hints below are GATED on a row cap: the normal arrival
     // path keeps every hinted frame delta-sized, but the documented
@@ -360,9 +358,9 @@ object GraphOps {
     // are past candidates, so their srcs were already in that set), and
     // symmetrically for dsts — so current-depth probes never need base
     // rows outside A × B.
-    val preBase = cut(base.join(newSrcs, base("dst") === newSrcs("s"))
+    val preBase = cutLineage(base.join(newSrcs, base("dst") === newSrcs("s"))
       .select(col("src").as("a"), col("s"), col("depth").as("d1")))
-    val postBase = cut(base.join(newDsts, base("src") === newDsts("t"))
+    val postBase = cutLineage(base.join(newDsts, base("src") === newDsts("t"))
       .select(col("t"), col("dst").as("b"), col("depth").as("d2")))
     val preRows = preBase.count()
     val postRows = postBase.count()
@@ -370,13 +368,13 @@ object GraphOps {
       .unionAll(viaNew.select(col("s").as("src"))).distinct()
     val bSet = postBase.select(col("b").as("dst"))
       .unionAll(viaNew.select(col("t").as("dst"))).distinct()
-    val baseRelevant = cut(base
+    val baseRelevant = cutLineage(base
       .join(maybeBroadcast(aSet, preRows + freshRows), Seq("src"), "left_semi")
       .join(maybeBroadcast(bSet, postRows + freshRows), Seq("dst"), "left_semi"))
     // improved pairs found so far, deduped to best depth per (src, dst);
     // empty to start, stays O(affected neighborhood). From here on no
     // round touches `base` — every per-round frame is delta-sized.
-    var delta = cut(base.limit(0))
+    var delta = cutLineage(base.limit(0))
     var deltaRows = 0L
     var improved = true
     while (improved) {
@@ -407,21 +405,21 @@ object GraphOps {
       // Catalyst's sizeInBytes estimation into minutes of BigInt
       // arithmetic on the nested join tree; keep the checkpointed-cand
       // + semi shape.)
-      val candCut = cut(cand)
+      val candCut = cutLineage(cand)
       val candRows = candCut.count()
       val candKeys = maybeBroadcast(candCut.select(col("src"), col("dst")), candRows)
       val current = baseRelevant.join(candKeys, Seq("src", "dst"), "left_semi")
         .unionAll(delta.join(candKeys, Seq("src", "dst"), "left_semi"))
         .groupBy(col("src"), col("dst"))
         .agg(min(col("depth")).as("depth"))
-      val better = cut(candCut.alias("c")
+      val better = cutLineage(candCut.alias("c")
         .join(current.alias("m"), Seq("src", "dst"), "left")
         .where(col("m.depth").isNull || col("c.depth") < col("m.depth"))
         .select(col("src"), col("dst"), col("c.depth").as("depth")))
       improved = !better.isEmpty
       if (improved) {
         // both sides small: replace re-improved pairs, append the rest
-        delta = cut(delta.join(better, Seq("src", "dst"), "left_anti")
+        delta = cutLineage(delta.join(better, Seq("src", "dst"), "left_anti")
           .unionAll(better))
         deltaRows = delta.count()
       }
@@ -449,7 +447,7 @@ object GraphOps {
     * differential proof of the maintenance algebra.
     */
   def assetClosureIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val all = cut(upwardEdges(spark, dir))
+    val all = cutLineage(upwardEdges(spark, dir))
     val split = abs(hash(col("src"), col("dst"))) % 20
     incrementalClosure(
       closureOf(all.where(split < 19)),
@@ -471,33 +469,44 @@ object GraphOps {
     // deployment WRITES its ranks once per refresh and every consumer
     // reads the table — in-session, the 5-round build lands in the
     // warmup and steady-state queries read the cache
-    memoized(spark, dir, "pagerank_ranks") { pagerankBuild(spark, dir) }
+    memoized(spark, dir, "pagerank_ranks") { pagerankBuild(spark, dir, lit(true)) }
 
-  private def pagerankBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "trade_edges") {
+  /** [[tradeEdges]] with each source's total out-weight `wout`: the
+    * iteration-invariant edge set of the rank loops, memoized under one
+    * key so [[pagerank]], [[personalizedPagerank]] and [[hits]] share
+    * one derivation.
+    */
+  private def weightedTradeEdges(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, dir, "trade_edges") {
       val e = tradeEdges(spark, dir)
       val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       e.join(wout, Seq("src"))
     }
+
+  /** The (node, pr) rank rounds with the teleport mass on the nodes
+    * `isSeed` selects: seeds start at [[PrScale]] and re-receive the
+    * (1−d) base each round, every other node starts at (and teleports)
+    * zero — `lit(true)` is plain PageRank. Without the per-round cut
+    * round R replans an R-deep join stack (measured 5.0 s); the data
+    * work itself is one tiny join+agg per round.
+    */
+  private def pagerankBuild(spark: SparkSession, dir: String, isSeed: Column): DataFrame = {
+    val edges = weightedTradeEdges(spark, dir)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
     val base = PrScale * (PrDampDen - PrDampNum) / PrDampDen
-    var pr = nodes.withColumn("pr", lit(PrScale))
-    for (_ <- 1 to PrRounds) {
+    val init = nodes.withColumn("pr", when(isSeed, lit(PrScale)).otherwise(lit(0L)))
+    Artifacts.iterate(init, PrRounds) { pr =>
       val contrib = edges
         .join(broadcast(pr), col("src") === col("node"))
         .select(col("dst"),
           expr(s"(pr * $PrDampNum * w) div ($PrDampDen * wout)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-      // lineage cut per round (same device as propagateToFixpoint):
-      // without it round R replans an R-deep join stack and the loop
-      // pays quadratic planning time — measured 5.0s → the data work
-      // itself is one tiny join+agg per round
-      pr = cut(nodes.join(contrib, col("node") === col("dst"), "left")
+      nodes.join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(base) + coalesce(col("contrib"), lit(0L))).as("pr")))
-    }
-    pr
+          (when(isSeed, lit(base)).otherwise(lit(0L)) +
+            coalesce(col("contrib"), lit(0L))).as("pr"))
+    }._1
   }
 
   /** Per-node triangle counts over the undirected trade graph — the
@@ -590,12 +599,12 @@ object GraphOps {
     * partial-agg degree count + two semi-joins (nothing wider than a
     * node id); lineage is cut per round (the degree count and both
     * semi-joins re-read the round's edge set — uncut, the plan tree
-    * would triple per round). Returns surviving nodes with their
-    * core-subgraph degree.
+    * would triple per round; the rounds run through
+    * [[graft.sources.Artifacts.iterate]]). Returns surviving nodes with
+    * their core-subgraph degree.
     */
   private[graft] def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges
-    for (_ <- 1 to rounds) e = cut(peelOnce(e, k))
+    val (e, _) = Artifacts.iterate(edges, rounds)(peelOnce(_, k))
     e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
   }
@@ -694,7 +703,7 @@ object GraphOps {
     // Exchanges / 72 parquet scans in the executed plan). The edge
     // list is ≤ |nations|² rows; cutting it makes every downstream
     // step small-data (guide §3.3's duplicate-subtree case).
-    val strong = cut(strongEdges(spark, dir))
+    val strong = cutLineage(strongEdges(spark, dir))
     val adj = strong.select(col("a").as("z"), col("b").as("n"))
       .unionAll(strong.select(col("b").as("z"), col("a").as("n")))
     val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("deg"))
@@ -727,38 +736,15 @@ object GraphOps {
     * lineage cuts; the ONLY change is where the (1−d) teleport lands:
     * seeds start with the full [[PrScale]] mass and re-receive the
     * base term each round, every other node starts at (and teleports)
-    * zero. Shares the memoized trade-edge artifact with [[pagerank]]
-    * (same memo key — one derivation serves both).
+    * zero. One round body with [[pagerank]] (`pagerankBuild`), over
+    * the same memoized trade-edge artifact.
     */
   def personalizedPagerank(spark: SparkSession, dir: String): DataFrame =
     // memoized rank artifact (the pagerank_ranks rationale)
-    memoized(spark, dir, "ppr_ranks") { pprBuild(spark, dir) }
-
-  private def pprBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "trade_edges") {
-      val e = tradeEdges(spark, dir)
-      val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-      e.join(wout, Seq("src"))
+    memoized(spark, dir, "ppr_ranks") {
+      pagerankBuild(spark, dir, col("node").isin(PprSeeds: _*))
+        .withColumnRenamed("pr", "ppr")
     }
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-    val base = PrScale * (PrDampDen - PrDampNum) / PrDampDen
-    def isSeed = col("node").isin(PprSeeds: _*)
-    var pr = nodes.withColumn("ppr",
-      when(isSeed, lit(PrScale)).otherwise(lit(0L)))
-    for (_ <- 1 to PrRounds) {
-      val contrib = edges
-        .join(broadcast(pr), col("src") === col("node"))
-        .select(col("dst"),
-          expr(s"(ppr * $PrDampNum * w) div ($PrDampDen * wout)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-      pr = cut(nodes.join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            coalesce(col("contrib"), lit(0L))).as("ppr")))
-    }
-    pr
-  }
 
   /** Runaway guard for [[starContract]] — far above the O(log² n)
     * rounds the algorithm needs on any real graph (log²(10^12) ≈ 40²
@@ -772,17 +758,19 @@ object GraphOps {
     * Vassilvitskii, "Connected Components in MapReduce and Beyond",
     * SoCC 2014) — the scale path for component labeling at 100 TB.
     *
-    * Why it exists next to [[TextOps.propagateToFixpoint]]: min-label
-    * propagation advances one HOP per round, so its round count is the
-    * graph diameter — and a near-dup graph over a web-scale corpus
-    * reliably contains one pathological chain (mirrored boilerplate,
-    * serial-numbered templates) thousands of docs long, turning "a few
-    * rounds" into thousands of full-edge-set shuffles. Star
-    * contraction instead REWIRES: each round every node re-attaches to
-    * the minimum of its neighborhood, so component height roughly
-    * halves per double-round and convergence is O(log² n) independent
-    * of diameter. Both produce the identical labeling (component
-    * minimum), which is the differential proof the spec runs.
+    * The library's one FIXPOINT labeler. Min-label propagation
+    * ([[TextOps.propagateBounded]], kept at a fixed round count because
+    * the oracle unrolls it) advances one HOP per round, so run to
+    * fixpoint its round count is the graph diameter — and a near-dup
+    * graph over a web-scale corpus reliably contains one pathological
+    * chain (mirrored boilerplate, serial-numbered templates) thousands
+    * of docs long, turning "a few rounds" into thousands of
+    * full-edge-set shuffles. Star contraction instead REWIRES: each
+    * round every node re-attaches to the minimum of its neighborhood,
+    * so component height roughly halves per double-round and
+    * convergence is O(log² n) independent of diameter. The labeling is
+    * the component minimum, which the spec checks against a
+    * driver-side union-find.
     *
     * Round shape (all scalable primitives, nothing wider than a node
     * id): large-star symmetrizes the edge list, takes the per-node
@@ -790,8 +778,8 @@ object GraphOps {
     * hash-agg), and re-points every LARGER neighbor at that min;
     * small-star orients edges (larger, smaller) and re-points the node
     * plus every non-min neighbor at the neighborhood min. Each phase
-    * is one groupBy + one |V|-row equi-join + one distinct. Lineage is
-    * cut per round through the shared [[graft.sources.Artifacts.cutLineage]] seam
+    * is one groupBy + one |V|-row equi-join + one distinct. The rounds
+    * run through [[graft.sources.Artifacts.iterate]], which cuts each
     * (reliable checkpoints on a cluster). Convergence = a full round
     * leaves the edge set unchanged (symmetric difference empty — two
     * anti-joins); the fixed points of the pair of operations are
@@ -803,12 +791,12 @@ object GraphOps {
     * spec asserts rounds ≪ diameter on a path graph).
     */
   def starContract(edgesIn: DataFrame): (DataFrame, Int) = {
-    var e = cut(edgesIn
+    val init = cutLineage(edgesIn
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .where(col("u") =!= col("v")).distinct())
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < StarMaxRounds) {
+    def unchanged(prev: DataFrame, next: DataFrame): Boolean =
+      next.except(prev).unionAll(prev.except(next)).isEmpty
+    val (stars, rounds) = Artifacts.iterate(init, StarMaxRounds, unchanged) { e =>
       // large-star: m(u) = min(N(u) ∪ {u}); every neighbor v > u
       // re-points at m(u). m < v always (m ≤ u < v), so no self-loops.
       val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -825,16 +813,13 @@ object GraphOps {
         least(col("u"), col("v")).as("v"))
       val wm = pairs.join(
         pairs.groupBy(col("u")).agg(min(col("v")).as("m")), Seq("u"))
-      val ss = cut(wm.where(col("v") =!= col("m"))
+      wm.where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .unionAll(wm.select(col("u"), col("m").as("v")))
-        .distinct())
-      changed = ss.except(e).unionAll(e.except(ss)).count()
-      e = ss
-      rounds += 1
+        .distinct()
     }
-    val labels = e.select(col("u").as("node"), col("v").as("label"))
-      .unionByName(e.select(col("v").as("node"), col("v").as("label")))
+    val labels = stars.select(col("u").as("node"), col("v").as("label"))
+      .unionByName(stars.select(col("v").as("node"), col("v").as("label")))
       .distinct()
     (labels, rounds)
   }
@@ -857,23 +842,18 @@ object GraphOps {
     *
     * Shape at 100 TB: each round is two (broadcast-rank join onto
     * edges + partial-aggregated groupBy) passes plus a 1-row max
-    * aggregate; ranks are node-sized. Lineage cuts per round (the
-    * pagerank seam) keep planning linear in rounds.
+    * aggregate; ranks are node-sized. A round carries one
+    * (node, h, a) frame through [[graft.sources.Artifacts.iterate]],
+    * whose per-round cut keeps planning linear in rounds.
     */
   def hits(spark: SparkSession, dir: String): DataFrame =
     // memoized rank artifact (the pagerank_ranks rationale)
     memoized(spark, dir, "hits_ranks") { hitsBuild(spark, dir) }
 
   private def hitsBuild(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "trade_edges") {
-      val e = tradeEdges(spark, dir)
-      val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-      e.join(wout, Seq("src"))
-    }.select(col("src"), col("dst"))
+    val edges = weightedTradeEdges(spark, dir).select(col("src"), col("dst"))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
-    var hub = nodes.withColumn("h", lit(HitsScale))
-    var auth = nodes.withColumn("a", lit(HitsScale))
     // per-round max via ONE unpartitioned window pass over the
     // node-sized rank table (the rank table is nations here and stays
     // ≪ edges on any trade-style graph; a web-scale node table would
@@ -887,30 +867,29 @@ object GraphOps {
       raw.select(col("node"), col(c), max(col(c)).over(all).as("mx"))
         .select(col("node"), expr(s"($c * $HitsScale) div mx").as(c))
     }
-    for (_ <- 1 to HitsRounds) {
+    val init = nodes.withColumn("h", lit(HitsScale)).withColumn("a", lit(HitsScale))
+    val (ranks, _) = Artifacts.iterate(init, HitsRounds) { prev =>
+      val hub = prev.select(col("node"), col("h"))
       val araw = nodes.join(
           edges.join(broadcast(hub), col("src") === col("node"))
             .groupBy(col("dst")).agg(sum(col("h")).as("a")),
           col("node") === col("dst"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("a"))
-      auth = gridNorm(araw, "a")
+      val auth = gridNorm(araw, "a")
       val hraw = nodes.join(
           edges.join(broadcast(auth), col("dst") === col("node"))
             .groupBy(col("src")).agg(sum(col("a")).as("h"))
             .select(col("src"), col("h")),
           col("node") === col("src"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).as("h"))
-      // ONE lineage cut per round (the pagerank cadence, house seam).
-      // Measured variants at sf0.1: agg+broadcast norm with 2 cuts
-      // 4.0 s, window norm + eager cut 4.2 s, lazy cut 4.7 s, no cut
-      // 15 s (the 5-round monolith replans every window/join) — the
-      // ~4 s floor is the 25-stage iterative chain itself, the same
-      // per-round constant pagerank pays half of for half the
-      // operators. The data work is node-sized throughout.
-      hub = cut(gridNorm(hraw, "h"))
+      // ONE lineage cut per round. Measured variants at sf0.1 (before
+      // the seam): agg+broadcast norm with 2 cuts 4.0 s, window norm +
+      // eager cut 4.2 s, lazy cut 4.7 s, no cut 15 s (the 5-round
+      // monolith replans every window/join). The data work is
+      // node-sized throughout.
+      gridNorm(hraw, "h").join(auth, Seq("node"))
     }
-    hub.join(auth, Seq("node"))
-      .select(col("node"), col("h").as("hub_grid"), col("a").as("auth_grid"),
+    ranks.select(col("node"), col("h").as("hub_grid"), col("a").as("auth_grid"),
         (col("h").cast("double") / lit(HitsScale.toDouble)).as("hub"),
         (col("a").cast("double") / lit(HitsScale.toDouble)).as("authority"))
   }

@@ -241,9 +241,11 @@ object TextOps {
     * corpus is scanned ONCE for the word-frequency aggregate; every
     * round after that is a pair-count aggregate + argmax + fuse over
     * the dictionary, which is vocabulary-sized, not corpus-sized).
-    * Each round cuts lineage ([[cutLineage]], the kCorePeel seam):
-    * the round's token table feeds both the pair count and the next
-    * fuse, and uncut the plan tree would double per round. The argmax
+    * Each round cuts lineage ([[cutLineage]]): the round's token table
+    * feeds both the pair count and the next fuse, and uncut the plan
+    * tree would double per round. The loop stays outside
+    * [[Artifacts.iterate]] because each round also yields its best
+    * pair, a second frame the seam does not carry. The argmax
     * is a 1-row TakeOrdered broadcast back onto the dictionary —
     * nothing driver-side, nothing corpus-sized after the first
     * aggregate.
@@ -374,7 +376,8 @@ object TextOps {
     * Scale shape: the corpus is scanned ONCE for the word-frequency
     * dictionary ([[bpeTrain]]'s type-vs-token device); every EM round
     * is dictionary-sized × a ~700-row broadcast literal — vocab-bound
-    * flat, like BPE. Per-round lineage is cut ([[cutLineage]]).
+    * flat, like BPE. The rounds run through [[Artifacts.iterate]],
+    * which cuts each one.
     */
   def unigramTrain(spark: SparkSession, dir: String): DataFrame =
     // memoized trained artifact (the bpe_merge_table rationale); the
@@ -420,19 +423,19 @@ object TextOps {
             i -> transform(sequence(i, least(length(w), i + ${UnigramMaxPiece - 1})),
               j -> substring(w, i, j - i + 1))))""")).as("piece"))
       .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
-    var vocab = cutLineage(prune(seed, UnigramSeedVocab))
     val sess = spark
     import sess.implicits._
     val parts = broadcast(
       unigramPartRows.toDF("wlen", "comp_id", "n_parts", "pstart", "plen"))
-    for (_ <- 1 to UnigramRounds) {
+    val (vocab, _) = Artifacts.iterate(
+        cutLineage(prune(seed, UnigramSeedVocab)), UnigramRounds) { vocab =>
       val best = unigramBest(dict.select(col("w")), vocab, parts)
       val counts = best.join(dict, Seq("w"))
         .join(parts,
           length(col("w")) === col("wlen") && col("bcid") === col("comp_id"))
         .select(col("f"), expr("substring(w, pstart, plen)").as("piece"))
         .groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
-      vocab = cutLineage(prune(counts, UnigramVocab))
+      prune(counts, UnigramVocab)
     }
     vocab.select(
       row_number().over(Window.orderBy(col("cnt").desc, col("piece").asc))
@@ -1052,151 +1055,81 @@ object TextOps {
   /** Rounds of min-label propagation in [[dedupClusters]]. Bounded and
     * unrolled so the DuckDB oracle mirrors the EXACT same computation;
     * near-dup clusters are short chains (pair graph diameter small), so
-    * 3 rounds converge on real data — at larger diameters iterate to
-    * fixpoint (each round is one join + partial-agg, embarrassingly
-    * scalable) or hand off to a dedicated CC (e.g. large-star/small-star).
+    * 3 rounds converge on real data. A pair graph of unknown diameter
+    * takes [[GraphOps.starContract]] instead ([[dedupClustersStar]]),
+    * whose round count does not grow with the diameter.
     */
   val CcRounds = 3
+
+  /** The symmetrized (doc_a, doc_b) LSH pair graph, memoized: it is the
+    * labelers' iteration-invariant input, and every labeling round
+    * would otherwise re-derive the whole LSH pipeline (any iterative
+    * graph algorithm on Spark must pin its edge set).
+    */
+  private def lshEdges(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, dir, "lsh_edges") {
+      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
+      pairs.unionAll(
+        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    }
+
+  /** A (node, label) labeling as the cluster table. */
+  private def clusterTable(labels: DataFrame): DataFrame =
+    labels.select(
+      col("node").as("doc_id"),
+      col("label").as("cluster_id"),
+      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
 
   /** Near-duplicate CLUSTERS from LSH candidate pairs via bounded
     * min-label propagation (connected components): every doc in a pair
     * graph gets the minimum doc_id of its component as cluster id — the
     * canonical representative — so "keep one per cluster" is a simple
-    * filter downstream. Each round: neighbor-min join + least() update.
+    * filter downstream.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // edges are iteration-invariant: materialize them once instead of
-    // re-deriving the whole LSH pipeline inside every propagation round
-    // (any iterative graph algorithm on Spark must pin its edge set)
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
+    val edges = lshEdges(spark, dir)
     // the propagated labels are themselves a shared artifact: both the
     // standalone clusters query and corpus_curation's near-dup-loser
-    // stage consume them, and each CC round re-reads them — one more
-    // memoized table keeps the rounds' lineage from re-running
-    val labels = memoized(spark, dir, "cc_labels") {
-      propagateBounded(edges)
-    }
-    labels.select(
-      col("node").as("doc_id"),
-      col("label").as("cluster_id"),
-      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
+    // stage consume them — one labeling per session
+    clusterTable(memoized(spark, dir, "cc_labels") { propagateBounded(edges) })
   }
-
-  /** [[dedupClusters]] iterated to FIXPOINT instead of a fixed round
-    * count: propagation stops when a round changes no label (checked
-    * with one tiny count aggregate per round — each round is still
-    * just a join + partial agg, embarrassingly scalable), with a hard
-    * ceiling as a runaway guard. The bounded variant exists because
-    * the DuckDB oracle must mirror an exactly-unrolled computation;
-    * this one is for real corpora whose pair-graph diameter is
-    * unknown. On the fixture both converge identically (diameter <
-    * [[CcRounds]]), so this registers against the SAME oracle — a
-    * differential proof of the fixpoint loop.
-    *
-    * Iteration hygiene at scale: each round's labels are persisted,
-    * the previous round's are unpersisted once superseded, and the
-    * loop reads only the (memoized) edge table — no lineage growth
-    * beyond one round.
-    */
-  val CcMaxRounds = 20
 
   /** The [[CcRounds]]-bounded min-label propagation over a symmetrized
     * (doc_a, doc_b) edge set — the EXACT unrolled computation the
-    * DuckDB oracle mirrors. Factored out of [[dedupClusters]] so the
-    * streaming export store's cluster stage runs the identical rounds
-    * (one definition; see also [[propagateToFixpoint]] for the
-    * unbounded variant).
+    * DuckDB oracle mirrors, and the library's one min-label round:
+    * the text and embedding cluster queries, the export chain and the
+    * multimodal dedup all label through here. A round is one
+    * neighbor-min join + least() update, and the round's labels feed
+    * both, so the rounds run through [[Artifacts.iterate]], which cuts
+    * each one (uncut, round r's plan holds 2^r copies of round 0).
     */
   private[graft] def propagateBounded(edges: DataFrame): DataFrame = {
     val nodes = edges.select(col("doc_a").as("node")).distinct()
-    var l = nodes.withColumn("label", col("node"))
-    for (_ <- 1 to CcRounds) {
+    Artifacts.iterate(nodes.withColumn("label", col("node")), CcRounds) { l =>
       val nbrMin = edges
         .join(l.select(col("node").as("doc_b"), col("label")), Seq("doc_b"))
         .groupBy(col("doc_a").as("node"))
         .agg(min(col("label")).as("nbr_label"))
-      l = l.join(nbrMin, Seq("node"), "left")
+      l.join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-    }
-    l
+    }._1
   }
 
-  /** Min-label propagation over a symmetrized (doc_a, doc_b) edge set
-    * until no label changes (or [[CcMaxRounds]]). Exposed for direct
-    * testing on graphs whose diameter exceeds [[CcRounds]].
-    *
-    * Each round's labels are checkpointed, not merely persisted:
-    * `labels` feeds the round twice (the neighbor-min join AND the
-    * left-join update), so without cutting lineage the logical plan
-    * doubles per round — exponential analysis cost that OOMs the
-    * driver near round 8 (measured). Checkpointing pins the round's
-    * rows and restarts lineage, the standard discipline for any
-    * iterative algorithm on Spark; superseded rounds' blocks are
-    * reclaimed by the ContextCleaner once unreferenced.
-    *
-    * The cut goes through [[Artifacts.cutLineage]], which upgrades to
-    * a reliable checkpoint when a checkpoint dir is set.
+  /** [[dedupClusters]] labeled to FIXPOINT by alternating
+    * large-star/small-star contraction ([[GraphOps.starContract]])
+    * instead of bounded min-label propagation — the O(log² n)-round
+    * scale path whose round count is independent of the pair-graph
+    * DIAMETER (propagation pays one round per hop; a single long
+    * near-dup chain at 100 TB makes that thousands of rounds).
+    * Identical labeling on the fixture (component minimum; its diameter
+    * is below [[CcRounds]]), so this registers against the SAME oracle
+    * as `dedup_clusters`, under two names (`dedup_clusters_star` and
+    * `dedup_clusters_fixpoint`) — a differential proof of a different
+    * algorithm, not just a different round count.
     */
-  def propagateToFixpoint(edges: DataFrame): DataFrame = {
-    var labels = cutLineage(
-      edges.select(col("doc_a").as("node")).distinct()
-        .withColumn("label", col("node")))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < CcMaxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("node").as("doc_b"), col("label")), Seq("doc_b"))
-        .groupBy(col("doc_a").as("node"))
-        .agg(min(col("label")).as("nbr_label"))
-      val next = cutLineage(labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label")))
-      changed = next.where(col("label") =!= col("prev")).count()
-      labels = next.select(col("node"), col("label"))
-      rounds += 1
-    }
-    labels
-  }
-
-  def dedupClustersFixpoint(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
-    propagateToFixpoint(edges).select(
-      col("node").as("doc_id"),
-      col("label").as("cluster_id"),
-      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
-  }
-
-  /** [[dedupClusters]] labeled by alternating large-star/small-star
-    * contraction ([[GraphOps.starContract]]) instead of min-label
-    * propagation — the O(log² n)-round scale path whose round count is
-    * independent of the pair-graph DIAMETER (propagation pays one
-    * round per hop; a single long near-dup chain at 100 TB makes that
-    * thousands of rounds). Identical labeling by construction
-    * (component minimum), so this registers against the SAME oracle as
-    * `dedup_clusters` — a second differential proof, this time of a
-    * different algorithm, not just a different round count.
-    */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
-    val (labels, _) = GraphOps.starContract(edges)
-    labels.select(
-      col("node").as("doc_id"),
-      col("label").as("cluster_id"),
-      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
-  }
+  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame =
+    clusterTable(GraphOps.starContract(lshEdges(spark, dir))._1)
 
   /** End-to-end corpus curation — the composed training-data pipeline:
     * quality gate → exact-dup removal (keep smallest doc_id per content

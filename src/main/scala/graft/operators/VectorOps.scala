@@ -556,10 +556,10 @@ object VectorOps {
 
   /** Near-duplicate CLUSTERS over the embedding pair graph — the
     * "keep one per near-dup set" composition [[dedupEmbedding]]'s
-    * Scaladoc promises: the same bounded min-label propagation as
-    * [[graft.operators.TextOps.dedupClusters]] (and the same round
-    * count, so the unrolled DuckDB oracle mirrors it exactly), run
-    * over the thresholded cosine pair graph. The symmetrized edge set
+    * Scaladoc promises: [[graft.operators.TextOps.dedupClusters]]'s
+    * bounded min-label propagation ([[TextOps.propagateBounded]], so the
+    * unrolled DuckDB oracle mirrors it exactly), run over the
+    * thresholded cosine pair graph. The symmetrized edge set
     * is memoized through TextOps' registry — iteration-invariant
     * inputs of an iterative algorithm must be pinned, and the shared
     * lifecycle (release/sweep) applies unchanged.
@@ -573,21 +573,10 @@ object VectorOps {
         pairs.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
     }
     // the propagated labels are a shared artifact too (mirrors the
-    // text family's cc_labels): memoizing caps the unrolled rounds'
-    // lineage at one computation per session
+    // text family's cc_labels): one labeling per session
     val labels = memoized(spark, dir, "emb_cc_labels") {
-      val nodes = edges.select(col("vec_a").as("node")).distinct()
-      var l = nodes.withColumn("label", col("node"))
-      for (_ <- 1 to TextOps.CcRounds) {
-        val nbrMin = edges
-          .join(l.select(col("node").as("vec_b"), col("label")), Seq("vec_b"))
-          .groupBy(col("vec_a").as("node"))
-          .agg(min(col("label")).as("nbr_label"))
-        l = l.join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      }
-      l
+      TextOps.propagateBounded(
+        edges.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
     }
     labels.select(
       col("node").as("vec_id"),
@@ -2303,8 +2292,10 @@ object VectorOps {
     * pays (banded seed join + one graph hop); each further round
     * touches ≤ |Q|·BeamWidth·GraphK candidate ids — query-sized, not
     * corpus-sized — joined against the ≤ GraphK-wide memoized graph on
-    * the frontier key. Rounds are lineage-cut so the loop's plan stays
-    * flat (the propagateToFixpoint discipline).
+    * the frontier key. Rounds are lineage-cut ([[cutLineage]]) so the
+    * loop's plan stays flat; the loop carries two frames (fresh and
+    * visited), so it cuts each itself rather than through
+    * [[graft.sources.Artifacts.iterate]].
     */
   def knnGraphBeam(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits,

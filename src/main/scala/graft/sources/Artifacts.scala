@@ -157,13 +157,34 @@ object Artifacts {
     * cut therefore upgrades to reliable `Dataset.checkpoint` whenever
     * the caller has set `sc.setCheckpointDir` (the cluster deployment
     * signal); runs without a checkpoint dir keep the cheaper
-    * executor-local variant. Iterative rounds, duplicate-subtree cuts
+    * executor-local variant. Iterative rounds ([[iterate]]), duplicate-subtree cuts
     * and the plan-size cuts under memoized artifacts all go through
     * here, so the upgrade applies uniformly.
     */
   private[graft] def cutLineage(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(true)
+
+  /** The library's one round seam: run `step` from `init` until
+    * `converged` or `maxRounds`, cutting every round's frame through
+    * [[cutLineage]]. A round's state usually feeds the next round more
+    * than once (a join AND an update), so an uncut loop's plan doubles
+    * per round; here no loop can forget the cut. `converged(prev, next)`
+    * sees only the two cut frames, so a check never recomputes a round.
+    * Returns the last frame and the number of rounds run.
+    */
+  private[graft] def iterate(init: DataFrame, maxRounds: Int,
+      converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+      (step: DataFrame => DataFrame): (DataFrame, Int) = {
+    @annotation.tailrec
+    def loop(prev: DataFrame, rounds: Int): (DataFrame, Int) =
+      if (rounds >= maxRounds) (prev, rounds)
+      else {
+        val next = cutLineage(step(prev))
+        if (converged(prev, next)) (next, rounds + 1) else loop(next, rounds + 1)
+      }
+    loop(init, 0)
+  }
 
   /** Unpersist and forget every slot of `spark`. */
   def release(spark: SparkSession): Unit =

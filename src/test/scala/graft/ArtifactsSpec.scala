@@ -4,9 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, least, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{TextOps, VectorOps}
+import graft.sources.Artifacts
 
 /** The artifact store notices when its input files change: a rewritten
   * source is a new generation of every value derived from it — source
@@ -122,5 +125,41 @@ class ArtifactsSpec extends SparkSpec {
       assert(TextOps.bm25Stats(spark, dir) === ((3L, 7L)))
     } === 0)
     TextOps.release(spark)
+  }
+
+  private def isCut(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+
+  test("iterate stops when converged holds, judging the two cut frames, and counts the rounds") {
+    val s = spark; import s.implicits._
+    // x -> min(x + 1, 3) from 0: rounds 1-3 move x, round 4 leaves it
+    var judgedUncut = false
+    val (last, rounds) = Artifacts.iterate(Seq(0L).toDF("x"), 10, (prev, next) => {
+      judgedUncut ||= !isCut(next)
+      prev.head().getLong(0) == next.head().getLong(0)
+    })(_.select(least(col("x") + 1L, lit(3L)).as("x")))
+    assert(rounds === 4)
+    assert(last.head().getLong(0) === 3L)
+    assert(isCut(last))
+    assert(!judgedUncut, "converged saw a round that was not cut")
+  }
+
+  test("iterate stops at maxRounds when nothing converges") {
+    val s = spark; import s.implicits._
+    val (last, rounds) = Artifacts.iterate(Seq(0L).toDF("x"), 5)(_.select((col("x") + 1L).as("x")))
+    assert(rounds === 5)
+    assert(last.head().getLong(0) === 5L)
+    assert(isCut(last))
+  }
+
+  test("propagateBounded's labels plan as one cut leaf, not a join tree per round") {
+    val s = spark; import s.implicits._
+    // path 0-1-2-3: diameter 3 = CcRounds, so the bounded rounds finish it
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val labels = TextOps.propagateBounded(
+      e.unionAll(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    assert(isCut(labels), labels.queryExecution.analyzed.treeString)
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L))
   }
 }

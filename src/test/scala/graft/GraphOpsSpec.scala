@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphOps, TextOps, VectorOps}
@@ -155,41 +156,46 @@ class GraphOpsSpec extends SparkSpec {
 
   test("closure loops upgrade to reliable checkpoints when a checkpoint dir is set") {
     val s = spark; import s.implicits._
-    // same reliable-variant coverage as the propagateToFixpoint test:
-    // with sc.setCheckpointDir set (the cluster deployment signal) the
-    // BFS and incremental-maintenance loops must write driver-
-    // recoverable checkpoint data AND produce the same closure
+    // with sc.setCheckpointDir set (the cluster deployment signal) every
+    // lineage cut must write driver-recoverable checkpoint data AND the
+    // loop must produce the same rows
     val ckpt = java.nio.file.Files.createTempDirectory("graft-graph-ckpt").toString
     val chain = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("src", "dst")
     val shortcut = Seq(("a", "c")).toDF("src", "dst")
-    def cset(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    val plainBatch = cset(GraphOps.closureOf(chain.unionAll(shortcut)))
-    val plainIncr = cset(GraphOps.incrementalClosure(GraphOps.closureOf(chain), shortcut))
-    // the same seam cuts a memoized artifact's plan (the auto-sized IVF
-    // lists) and an in-query duplicate subtree (linkPredict's edges);
-    // each run gets its own session so the memo builds again
-    def ann() = {
+    def rows(df: DataFrame): Set[Row] = df.collect().toSet
+    // a memoized artifact builds once per session, so each run of one
+    // gets its own session
+    def fresh(build: SparkSession => DataFrame): Set[Row] = {
       val s = spark.newSession()
-      try VectorOps.ivfAssignAuto(s, sfDir).collect().toSet
-      finally TextOps.release(s)
+      try rows(build(s)) finally TextOps.release(s)
     }
-    def links() = GraphOps.linkPredict(spark, sfDir).collect().toSet
-    val (plainAnn, plainLinks) = (ann(), links())
+    // the BFS and incremental-maintenance loops; the same seam cuts a
+    // memoized artifact's plan (the auto-sized IVF lists), an in-query
+    // duplicate subtree (linkPredict's edges) and every round loop of
+    // Artifacts.iterate
+    val loops: Seq[(String, () => Set[Row])] = Seq(
+      "closureOf" -> (() => rows(GraphOps.closureOf(chain.unionAll(shortcut)))),
+      "incrementalClosure" -> (() =>
+        rows(GraphOps.incrementalClosure(GraphOps.closureOf(chain), shortcut))),
+      "ivfAssignAuto" -> (() => fresh(VectorOps.ivfAssignAuto(_, sfDir))),
+      "linkPredict" -> (() => rows(GraphOps.linkPredict(spark, sfDir))),
+      "propagateBounded" -> (() =>
+        rows(TextOps.propagateBounded(symEdges(Seq((0L, 1L), (1L, 2L), (5L, 6L)))))),
+      "kCorePeel" -> (() => rows(GraphOps.kCorePeel(
+        undEdges(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+          (4L, 5L), (5L, 6L))), 3, 3))),
+      "pagerank" -> (() => fresh(GraphOps.pagerank(_, sfDir))),
+      "unigramTrainFromDict" -> (() => rows(TextOps.unigramTrainFromDict(
+        Seq(("lower", 5L), ("lowest", 2L), ("newer", 6L), ("wider", 3L), ("new", 2L))
+          .toDF("w", "f")))))
+    val plain = loops.map(_._2())
     def landed() = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     spark.sparkContext.setCheckpointDir(ckpt)
-    try {
-      assert(cset(GraphOps.closureOf(chain.unionAll(shortcut))) === plainBatch)
-      assert(cset(GraphOps.incrementalClosure(GraphOps.closureOf(chain), shortcut))
-        === plainIncr)
-      val afterGraph = landed()
-      assert(afterGraph > 0, "no reliable checkpoint files written by the graph loops")
-      assert(ann() === plainAnn)
-      val afterAnn = landed()
-      assert(afterAnn > afterGraph, "no reliable checkpoint files written by ivfAssignAuto")
-      assert(links() === plainLinks)
-      assert(landed() > afterAnn, "no reliable checkpoint files written by linkPredict")
+    try loops.zip(plain).foreach { case ((name, run), expected) =>
+      val before = landed()
+      assert(run() === expected, s"$name rows differ under a checkpoint dir")
+      assert(landed() > before, s"no reliable checkpoint files written by $name")
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
@@ -312,7 +318,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(GraphOps.sampleStrengthP75(und).head().getLong(0) === expected)
   }
 
-  test("starContract labels a seeded random graph identically to min-label propagation") {
+  test("starContract labels a seeded random graph with each component's union-find minimum") {
     val rnd = new scala.util.Random(42)
     // ~60 nodes, ~70 random edges → a mix of components, chains, cycles
     val pairs = (0 until 70).map { _ =>
@@ -321,16 +327,26 @@ class GraphOpsSpec extends SparkSpec {
     val edges = symEdges(pairs)
     val (starLabels, _) = GraphOps.starContract(edges)
     val star = starLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = graft.operators.TextOps.propagateToFixpoint(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === prop, "different algorithms, same fixed point: component minimum")
+    // driver-side reference: union-find over the collected edges, each
+    // union rooting the merged set at the smaller root, so every root
+    // is its component's minimum
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.collect().foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val reference = parent.keys.toList.map(x => x -> find(x)).toMap
+    assert(star === reference, "star contraction's fixed point is the component minimum")
   }
 
   test("starContract converges on a path graph in rounds ≪ diameter") {
     // 2000-node path: diameter 1999. Min-label propagation advances one
-    // hop per round (propagateToFixpoint's CcMaxRounds=20 ceiling cannot
-    // finish it); star contraction must land every node on label 0 in
-    // O(log² n) rounds.
+    // hop per round, so it would need 1999 rounds; star contraction
+    // must land every node on label 0 in O(log² n) rounds.
     val n = 2000
     val pairs = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
     val (labels, rounds) = GraphOps.starContract(symEdges(pairs))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{GraphOps, TextOps}
 import graft.sources.Artifacts
 
 /** Unit tests for the text-analysis / dedup operators, on injected
@@ -472,7 +472,7 @@ class TextOpsSpec extends SparkSpec {
     assert(Artifacts.memoEntriesTotal === before)
   }
 
-  test("propagateToFixpoint upgrades to reliable checkpoints when a checkpoint dir is set") {
+  test("starContract upgrades to reliable checkpoints when a checkpoint dir is set") {
     val s = spark; import s.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckpt)
@@ -481,7 +481,7 @@ class TextOpsSpec extends SparkSpec {
       val edges = pairs.toDF("doc_a", "doc_b")
       val sym = edges.unionAll(
         edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      val labels = TextOps.propagateToFixpoint(sym).collect()
+      val labels = GraphOps.starContract(sym)._1.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.values.toSet === Set(0L))
       // reliable (driver-recoverable) checkpoint data actually landed
@@ -494,14 +494,18 @@ class TextOpsSpec extends SparkSpec {
   test("fixpoint propagation converges on a chain LONGER than the bounded rounds") {
     val s = spark; import s.implicits._
     // 9-node path 0-1-...-8: diameter 8 > CcRounds=3, so the bounded
-    // unroll CANNOT finish this graph — the fixpoint loop must
+    // unroll CANNOT finish this graph — the fixpoint labeler
+    // (starContract, behind dedup_clusters_fixpoint) must
     val n = 9
     val pairs = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
     val edges = pairs.toDF("doc_a", "doc_b")
     val sym = edges.unionAll(
       edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val labels = TextOps.propagateToFixpoint(sym).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labelsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labelsOf(TextOps.propagateBounded(sym)).values.toSet !== Set(0L),
+      "the bounded rounds finished the chain; it no longer tests the fixpoint")
+    val labels = labelsOf(GraphOps.starContract(sym)._1)
     assert(labels.size === n)
     assert(labels.values.toSet === Set(0L), s"not fully converged: $labels")
   }
