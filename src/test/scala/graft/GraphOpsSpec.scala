@@ -318,7 +318,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(GraphOps.sampleStrengthP75(und).head().getLong(0) === expected)
   }
 
-  test("starContract labels a seeded random graph with each component's union-find minimum") {
+  test("starContract labels a seeded random graph identically to min-label propagation") {
     val rnd = new scala.util.Random(42)
     // ~60 nodes, ~70 random edges → a mix of components, chains, cycles
     val pairs = (0 until 70).map { _ =>
@@ -327,20 +327,20 @@ class GraphOpsSpec extends SparkSpec {
     val edges = symEdges(pairs)
     val (starLabels, _) = GraphOps.starContract(edges)
     val star = starLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // driver-side reference: union-find over the collected edges, each
-    // union rooting the merged set at the smaller root, so every root
-    // is its component's minimum
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    // driver-side reference: min-label propagation over the collected
+    // edges — every node starts as its own label and takes the smaller
+    // neighbour label each sweep until no label moves
+    val adj = edges.collect().map(r => r.getLong(0) -> r.getLong(1))
+    var prop = adj.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+    var moved = true
+    while (moved) {
+      val next = adj.foldLeft(prop) { case (m, (a, b)) =>
+        if (m(b) < m(a)) m.updated(a, m(b)) else m
+      }
+      moved = next != prop
+      prop = next
     }
-    edges.collect().foreach { r =>
-      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-      if (a != b) parent(math.max(a, b)) = math.min(a, b)
-    }
-    val reference = parent.keys.toList.map(x => x -> find(x)).toMap
-    assert(star === reference, "star contraction's fixed point is the component minimum")
+    assert(star === prop, "different algorithms, same fixed point: component minimum")
   }
 
   test("starContract converges on a path graph in rounds ≪ diameter") {
